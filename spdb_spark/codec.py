@@ -45,7 +45,11 @@ def unpack_array(blob: bytes) -> np.ndarray:
     if magic != _MAGIC:
         raise ValueError("bad blob magic")
     dtype = np.dtype(_CODE_DTYPES[code])
-    raw = zlib.decompress(blob[_HEADER.size:])
+    # exact bufsize: zlib fills one buffer instead of growing a block list
+    # and joining it (which holds the cuboid twice)
+    raw = zlib.decompress(
+        memoryview(blob)[_HEADER.size:], bufsize=z * y * x * dtype.itemsize
+    )
     return np.frombuffer(raw, dtype=dtype).reshape(z, y, x)
 
 

@@ -121,11 +121,11 @@ class SpatialDB:
             return arr[:, :, :: 2**factor, :: 2**factor]  # stride pick (zoomOutData)
         factor = -factor
         small_corner = [corner[0] >> factor, corner[1] >> factor, corner[2]]
+        # every base cell the box touches, counted from the corner's cell
         small_extent = [
-            -(-extent[0] // 2**factor),
-            -(-extent[1] // 2**factor),
-            extent[2],
-        ]
+            ((c + e - 1) >> factor) - (c >> factor) + 1
+            for c, e in zip(corner[:2], extent[:2])
+        ] + [extent[2]]
         arr = store.cutout(small_corner, small_extent, base, time_sample_range, filter_ids)
         rep = arr.repeat(2**factor, axis=3).repeat(2**factor, axis=2)  # zoomInData
         ox = corner[0] - (small_corner[0] << factor)

@@ -19,27 +19,35 @@ atomic partition rewrite (Delta/Iceberg MERGE INTO in production — plain
 parquet dynamic-partition-overwrite here since the container has no Delta).
 
 Read path parity (spatialdb.py:360-717): box -> covering cuboid range filter
-(partition+stats pruning) -> Arrow-batched blob decode -> trim to exact box;
-absent cuboids are implicit zeros (zero-suppression, spatialdb.py:571-585).
+(partition+stats pruning). Dense `cutout` is block-level with driver
+assembly (Cube.add_data, cube.py:87-106): blobs come back over Arrow and a
+driver thread pool decodes, crops and pastes each into the output array.
+The voxel DataFrame (`cutout_voxels`, `voxels`) is the distributed path.
+Absent cuboids are implicit zeros (zero-suppression, spatialdb.py:571-585).
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from itertools import product
 from urllib.parse import unquote
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from spdb_spark.codec import (
     blocks_to_voxels,
     make_merge_voxels_to_blocks,
     make_voxels_to_blocks,
     pack_array,
+    unpack_array,
 )
 from spdb_spark.constants import CUBOID_X, CUBOID_Y, CUBOID_Z
 from spdb_spark.morton import xyz_morton
@@ -49,12 +57,37 @@ from spdb_spark.schema import CUBOID_SCHEMA, VOXEL_SCHEMA
 # into one physical partition.
 PGROUP_SHIFT = 12
 
-# NOTE: StructType.add mutates in place — build the read schema by copy.
-from pyspark.sql.types import IntegerType, StructField, StructType  # noqa: E402
+# Driver decode pool for block reads: zlib releases the GIL, so decodes of
+# separate blobs run in parallel on the cores this process may use.
+_DECODE_THREADS = (
+    len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
+)
 
+# NOTE: StructType.add mutates in place — build the read schema by copy.
 _READ_SCHEMA = StructType(
     list(CUBOID_SCHEMA.fields) + [StructField("pgroup", IntegerType(), True)]
 )
+
+
+def _cuboid_ranges(corner: Sequence[int], extent: Sequence[int]) -> list[range]:
+    """x, y and z cuboid-index ranges covering a box."""
+    return [
+        range(c // n, (c + e - 1) // n + 1)
+        for c, e, n in zip(corner, extent, (CUBOID_X, CUBOID_Y, CUBOID_Z))
+    ]
+
+
+def _overlap(
+    corner: Sequence[int], extent: Sequence[int], idx: Sequence[int]
+) -> tuple[tuple[slice, ...], tuple[slice, ...]]:
+    """[z,y,x] slices of the overlap of a box with cuboid idx=(x,y,z)
+    (cuboid-local, box-local)."""
+    in_cuboid, in_box = [], []
+    for c, e, i, n in zip(corner, extent, idx, (CUBOID_X, CUBOID_Y, CUBOID_Z)):
+        lo, hi = max(c, i * n), min(c + e, (i + 1) * n)
+        in_cuboid.append(slice(lo - i * n, hi - i * n))
+        in_box.append(slice(lo - c, hi - c))
+    return tuple(in_cuboid[::-1]), tuple(in_box[::-1])
 
 
 def _with_pgroup(df: DataFrame) -> DataFrame:
@@ -68,23 +101,10 @@ def _list_partition_dirs(root: str) -> dict[tuple[str, int, int], str]:
     Hive-layout parquet table root. Values are unescaped the way Spark
     escapes partition path names (%XX, same as URL quoting)."""
     out: dict[tuple[str, int, int], str] = {}
-    if not os.path.isdir(root):
-        return out
-    for lk_dir in os.listdir(root):
-        if not lk_dir.startswith("lookup_key="):
-            continue
-        lk = unquote(lk_dir[len("lookup_key="):])
-        lk_path = os.path.join(root, lk_dir)
-        for res_dir in os.listdir(lk_path):
-            if not res_dir.startswith("resolution="):
-                continue
-            res = int(res_dir[len("resolution="):])
-            res_path = os.path.join(lk_path, res_dir)
-            for pg_dir in os.listdir(res_path):
-                if not pg_dir.startswith("pgroup="):
-                    continue
-                pg = int(pg_dir[len("pgroup="):])
-                out[(lk, res, pg)] = os.path.join(res_path, pg_dir)
+    pattern = os.path.join(glob.escape(root), "lookup_key=*", "resolution=*", "pgroup=*")
+    for path in glob.glob(pattern):
+        lk, res, pg = (unquote(d.split("=", 1)[1]) for d in path.split(os.sep)[-3:])
+        out[(lk, int(res), int(pg))] = path
     return out
 
 
@@ -189,45 +209,15 @@ class CuboidStore:
             data = data[None, ...]
         if data.ndim != 4:
             raise ValueError(f"expected [t,z,y,x] or [z,y,x], got {data.shape}")
-        x0, y0, z0 = corner
-        nt, nz, ny, nx = data.shape
+        extent = data.shape[:0:-1]
         rows = []
-        xi0, xi1 = x0 // CUBOID_X, (x0 + nx - 1) // CUBOID_X
-        yi0, yi1 = y0 // CUBOID_Y, (y0 + ny - 1) // CUBOID_Y
-        zi0, zi1 = z0 // CUBOID_Z, (z0 + nz - 1) // CUBOID_Z
-        np_dtype = np.dtype(self.datatype)
-        for ti in range(nt):
-            for zi in range(zi0, zi1 + 1):
-                for yi in range(yi0, yi1 + 1):
-                    for xi in range(xi0, xi1 + 1):
-                        tile = np.zeros((CUBOID_Z, CUBOID_Y, CUBOID_X), dtype=np_dtype)
-                        # intersection of the cuboid with the input box
-                        gx0 = max(x0, xi * CUBOID_X)
-                        gx1 = min(x0 + nx, (xi + 1) * CUBOID_X)
-                        gy0 = max(y0, yi * CUBOID_Y)
-                        gy1 = min(y0 + ny, (yi + 1) * CUBOID_Y)
-                        gz0 = max(z0, zi * CUBOID_Z)
-                        gz1 = min(z0 + nz, (zi + 1) * CUBOID_Z)
-                        tile[
-                            gz0 - zi * CUBOID_Z : gz1 - zi * CUBOID_Z,
-                            gy0 - yi * CUBOID_Y : gy1 - yi * CUBOID_Y,
-                            gx0 - xi * CUBOID_X : gx1 - xi * CUBOID_X,
-                        ] = data[
-                            ti, gz0 - z0 : gz1 - z0, gy0 - y0 : gy1 - y0,
-                            gx0 - x0 : gx1 - x0,
-                        ]
-                        rows.append(
-                            (
-                                self.lookup_key,
-                                resolution,
-                                time_sample_start + ti,
-                                xyz_morton(xi, yi, zi),
-                                xi,
-                                yi,
-                                zi,
-                                bytearray(pack_array(tile)),
-                            )
-                        )
+        for ti in range(data.shape[0]):
+            for zi, yi, xi in product(*_cuboid_ranges(corner, extent)[::-1]):
+                tile = np.zeros((CUBOID_Z, CUBOID_Y, CUBOID_X), dtype=self.datatype)
+                in_cuboid, in_box = _overlap(corner, extent, (xi, yi, zi))
+                tile[in_cuboid] = data[ti][in_box]
+                rows.append((self.lookup_key, resolution, time_sample_start + ti,
+                             xyz_morton(xi, yi, zi), xi, yi, zi, bytearray(pack_array(tile))))
         return rows
 
     def write_cuboid(
@@ -372,22 +362,14 @@ class CuboidStore:
         """Fetch specific cuboids by Morton id, decoded and Morton-sorted
         (reference: SpatialDB.get_cubes/sort_cubes, spatialdb.py:120-185).
         Absent cuboids come back as zero cubes (zero-suppression)."""
-        from spdb_spark.codec import unpack_array
-
         wanted = sorted(set(int(m) for m in mortons))
         pgroups = sorted({m >> PGROUP_SHIFT for m in wanted})
-        rows = (
-            self.blocks(resolution, pgroups=pgroups)
-            .where((F.col("t") == t) & (F.col("morton").isin(wanted)))
-            .select("morton", "blob")
-            .collect()
+        blocks = self.blocks(resolution, pgroups=pgroups).where(
+            (F.col("t") == t) & (F.col("morton").isin(wanted))
         )
-        out = {int(r.morton): unpack_array(bytes(r.blob)) for r in rows}
-        zeros_shape = (CUBOID_Z, CUBOID_Y, CUBOID_X)
-        for m in wanted:
-            if m not in out:
-                out[m] = np.zeros(zeros_shape, dtype=np.dtype(self.datatype))
-        return dict(sorted(out.items()))
+        out = dict(self._each_block(blocks, ["morton"], lambda r, arr: (int(r.morton), arr)))
+        shape = (CUBOID_Z, CUBOID_Y, CUBOID_X)
+        return {m: out[m] if m in out else np.zeros(shape, self.datatype) for m in wanted}
 
     # -- maintenance ----------------------------------------------------------
 
@@ -471,17 +453,39 @@ class CuboidStore:
         """Super-block partitions covering a box, or None when the box is
         large enough that partition pruning stops paying (scan filters
         still prune via x/y/z_idx stats)."""
-        (x0, y0, z0), (dx, dy, dz) = corner, extent
-        xs = range(x0 // CUBOID_X, (x0 + dx - 1) // CUBOID_X + 1)
-        ys = range(y0 // CUBOID_Y, (y0 + dy - 1) // CUBOID_Y + 1)
-        zs = range(z0 // CUBOID_Z, (z0 + dz - 1) // CUBOID_Z + 1)
+        xs, ys, zs = _cuboid_ranges(corner, extent)
         if len(xs) * len(ys) * len(zs) > 32768:
             return None
-        groups = {
-            xyz_morton(xi, yi, zi) >> PGROUP_SHIFT
-            for xi in xs for yi in ys for zi in zs
-        }
+        groups = {xyz_morton(*idx) >> PGROUP_SHIFT for idx in product(xs, ys, zs)}
         return sorted(groups) if len(groups) <= cap else None
+
+    def _box_blocks(
+        self, corner: Sequence[int], extent: Sequence[int], resolution: int,
+        time_sample_range: Sequence[int] | None,
+    ) -> DataFrame:
+        """Block rows covering a box: pgroup partition pruning plus the
+        x/y/z_idx and t range predicates (row-group stats pruning)."""
+        blocks = self.blocks(resolution, pgroups=self._box_pgroups(corner, extent))
+        for col, r in zip(("x_idx", "y_idx", "z_idx"), _cuboid_ranges(corner, extent)):
+            blocks = blocks.where(F.col(col).between(r.start, r.stop - 1))
+        if time_sample_range is not None:
+            t0, t1 = time_sample_range
+            blocks = blocks.where(F.col("t").between(t0, t1 - 1))
+        return blocks
+
+    @staticmethod
+    def _each_block(
+        blocks: DataFrame, cols: Sequence[str], fn: Callable[[tuple, np.ndarray], object]
+    ) -> list:
+        """Fetch `cols` and the blob of each block row over Arrow and return
+        fn(row, decoded [z,y,x] array) per row, run on the driver decode
+        pool. Arrays live only inside `fn`, so a `fn` that consumes them
+        keeps extra memory at about one cuboid per thread."""
+        pdf = blocks.select(*cols, "blob").toPandas()
+        with ThreadPoolExecutor(_DECODE_THREADS) as pool:
+            return list(
+                pool.map(lambda r: fn(r, unpack_array(r.blob)), pdf.itertuples(index=False))
+            )
 
     def cutout_voxels(
         self,
@@ -491,23 +495,11 @@ class CuboidStore:
         time_sample_range: Sequence[int] | None = None,
         filter_ids: Sequence[int] | None = None,
     ) -> DataFrame:
-        """Distributed cutout: pruned block scan -> decode -> exact box trim
-        -> optional id filter. Returns the voxel DataFrame (no collect)."""
+        """Distributed cutout: pruned block scan -> executor decode to voxel
+        rows -> exact box trim -> optional id filter. Returns the voxel
+        DataFrame (no collect); dense reads use `cutout`."""
         (x0, y0, z0), (dx, dy, dz) = corner, extent
-        pgroups = self._box_pgroups(corner, extent)
-        blocks = self.blocks(resolution, pgroups=pgroups).where(
-            (F.col("x_idx") >= x0 // CUBOID_X)
-            & (F.col("x_idx") <= (x0 + dx - 1) // CUBOID_X)
-            & (F.col("y_idx") >= y0 // CUBOID_Y)
-            & (F.col("y_idx") <= (y0 + dy - 1) // CUBOID_Y)
-            & (F.col("z_idx") >= z0 // CUBOID_Z)
-            & (F.col("z_idx") <= (z0 + dz - 1) // CUBOID_Z)
-        )
-        if time_sample_range is not None:
-            blocks = blocks.where(
-                (F.col("t") >= time_sample_range[0])
-                & (F.col("t") < time_sample_range[1])
-            )
+        blocks = self._box_blocks(corner, extent, resolution, time_sample_range)
         vox = blocks.mapInPandas(blocks_to_voxels, VOXEL_SCHEMA).where(
             (F.col("x") >= x0) & (F.col("x") < x0 + dx)
             & (F.col("y") >= y0) & (F.col("y") < y0 + dy)
@@ -525,19 +517,30 @@ class CuboidStore:
         time_sample_range: Sequence[int] | None = None,
         filter_ids: Sequence[int] | None = None,
     ) -> np.ndarray:
-        """Dense cutout as a [t,z,y,x] ndarray (driver assembly — the Cube
-        return of the reference, zeros for absent voxels)."""
+        """Dense cutout as a [t,z,y,x] ndarray, zeros for absent voxels (the
+        Cube return of the reference). Block-level driver assembly: each
+        pruned blob is decoded, cropped, id-filtered and pasted on the
+        decode pool. `filter_ids` match in the int64 view, like the voxel
+        DataFrame: ids >= 2^63 are passed in their wrapped form."""
         t0, t1 = time_sample_range or (0, 1)
-        vox = self.cutout_voxels(
-            corner, extent, resolution, (t0, t1), filter_ids
-        ).toPandas()
-        (x0, y0, z0), (dx, dy, dz) = corner, extent
-        out = np.zeros((t1 - t0, dz, dy, dx), dtype=np.dtype(self.datatype))
-        if len(vox):
-            out[
-                vox["t"].to_numpy() - t0,
-                vox["z"].to_numpy() - z0,
-                vox["y"].to_numpy() - y0,
-                vox["x"].to_numpy() - x0,
-            ] = vox["value"].to_numpy().astype(np.dtype(self.datatype))
+        out = np.zeros((t1 - t0, *extent[::-1]), dtype=self.datatype)
+        # ids outside int64 can never match the int64 view
+        ids = None if filter_ids is None else np.array(
+            [i for i in map(int, filter_ids) if -(2**63) <= i < 2**63], dtype=np.int64
+        )
+
+        def paste(r, arr: np.ndarray) -> None:
+            in_cuboid, in_box = _overlap(corner, extent, (r.x_idx, r.y_idx, r.z_idx))
+            piece = arr[in_cuboid]
+            # only non-zero voxels: all-zero pages of `out` stay untouched
+            keep = piece != 0
+            if ids is not None:
+                keep &= np.isin(piece.astype(np.int64), ids)
+            np.copyto(out[r.t - t0][in_box], piece, where=keep)
+
+        self._each_block(
+            self._box_blocks(corner, extent, resolution, (t0, t1)),
+            ["t", "x_idx", "y_idx", "z_idx"],
+            paste,
+        )
         return out

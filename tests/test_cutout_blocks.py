@@ -1,0 +1,182 @@
+"""Block-level dense cutout: `CuboidStore.cutout` decodes, crops and pastes
+cuboid blobs on the driver. It must agree with the distributed voxel path
+(`cutout_voxels`) and with the numpy arrays that were written, and it must
+never decode to voxel rows.
+
+The data is written once per module: per channel dtype, two time samples
+(t=0 and t=2; t=1 is never written) of a sparse random volume spanning
+cuboids x_idx 15..16, so the region crosses a super-block (pgroup)
+boundary as well as cuboid boundaries in x, y and z."""
+
+import sys
+
+import numpy as np
+import pytest
+
+import spdb_spark.store as store_mod
+from spdb_spark.constants import CUBOID_X
+from spdb_spark.spatialdb import SpatialDB, make_resource
+from spdb_spark.store import CuboidStore
+
+DTYPES = ("uint8", "uint16", "uint64")
+WRITE_CORNER = (16 * CUBOID_X - 20, 512 - 20, 16 - 12)  # x_idx 15|16 is a pgroup edge
+WRITE_SHAPE = (24, 40, 40)  # [z, y, x]
+WRITTEN_T = (0, 2)
+# unaligned boxes: the first also covers absent cuboids (x_idx 14, z_idx 2)
+BOXES = [
+    ((15 * CUBOID_X - 100, 481, 3), (CUBOID_X + 130, 37, 37)),
+    ((WRITE_CORNER[0] + 7, WRITE_CORNER[1] + 3, WRITE_CORNER[2] + 5), (29, 33, 17)),
+]
+# a box that touches only absent cuboids
+EMPTY_BOX = ((40 * CUBOID_X + 1, 3, 1), (30, 20, 10))
+
+
+def _volume(dtype: str, seed: int) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    # uint8/uint16 never hold their max value: it is the absent filter id
+    vals = rng.integers(1, np.iinfo(dtype).max, size=WRITE_SHAPE, dtype=dtype)
+    vals[rng.random(WRITE_SHAPE) < 0.7] = 0
+    if dtype == "uint64":
+        vals[0, 0, 0] = np.uint64(2**64 - 1)  # wraps to -1 in the int64 view
+    return vals
+
+
+@pytest.fixture(scope="module")
+def channels(spark, tmp_path_factory):
+    """dtype -> (store, {t: written [z,y,x] volume})."""
+    root = tmp_path_factory.mktemp("blocks")
+    out = {}
+    for i, dtype in enumerate(DTYPES):
+        st = CuboidStore(spark, str(root / dtype), datatype=dtype)
+        vols = {t: _volume(dtype, 10 * i + t) for t in WRITTEN_T}
+        st.write_cuboid(np.stack([vols[0]]), WRITE_CORNER, time_sample_start=0)
+        st.write_cuboid(np.stack([vols[2]]), WRITE_CORNER, time_sample_start=2)
+        out[dtype] = (st, vols)
+    return out
+
+
+def _expected(vols, dtype, corner, extent, t_range, filter_ids=None):
+    """Dense [t,z,y,x] truth for a box, from the written numpy volumes."""
+    t0, t1 = t_range
+    full = np.zeros((t1 - t0, *extent[::-1]), dtype=dtype)
+    lo = [max(c, w) for c, w in zip(corner, WRITE_CORNER)]
+    hi = [min(c + e, w + s) for c, e, w, s in zip(corner, extent, WRITE_CORNER, WRITE_SHAPE[::-1])]
+    if all(a < b for a, b in zip(lo, hi)):
+        for t, vol in vols.items():
+            if not t0 <= t < t1:
+                continue
+            src = vol[tuple(slice(a - w, b - w) for a, b, w in zip(lo, hi, WRITE_CORNER))[::-1]]
+            dst = tuple(slice(a - c, b - c) for a, b, c in zip(lo, hi, corner))[::-1]
+            full[t - t0][dst] = src
+    if filter_ids is not None:
+        keep = np.isin(full.astype(np.int64), np.array(filter_ids, dtype=np.int64))
+        full = np.where(keep, full, 0).astype(dtype)
+    return full
+
+
+def _from_voxels(st, dtype, corner, extent, t_range, filter_ids=None):
+    """The same box assembled from the distributed voxel path."""
+    vox = st.cutout_voxels(corner, extent, 0, t_range, filter_ids).toPandas()
+    out = np.zeros((t_range[1] - t_range[0], *extent[::-1]), dtype=dtype)
+    if not len(vox):
+        return out
+    out[
+        vox["t"].to_numpy() - t_range[0],
+        vox["z"].to_numpy() - corner[2],
+        vox["y"].to_numpy() - corner[1],
+        vox["x"].to_numpy() - corner[0],
+    ] = vox["value"].to_numpy().astype(dtype)
+    return out
+
+
+def test_boxes_cross_a_pgroup_boundary(channels):
+    st = channels["uint8"][0]
+    assert [len(st._box_pgroups(*box)) for box in BOXES] == [2, 2]
+
+
+@pytest.mark.parametrize("dtype", DTYPES)
+@pytest.mark.parametrize("box", BOXES, ids=["absent_cuboids", "inner"])
+def test_dense_matches_voxel_path_and_truth(channels, dtype, box):
+    st, vols = channels[dtype]
+    corner, extent = box
+    t_range = (0, 3)  # t=1 was never written
+    dense = st.cutout(corner, extent, time_sample_range=t_range)
+    assert dense.dtype == np.dtype(dtype)
+    assert dense.shape == (3, *extent[::-1])
+    truth = _expected(vols, dtype, corner, extent, t_range)
+    assert truth.any() and not truth[1].any()
+    np.testing.assert_array_equal(dense, truth)
+    np.testing.assert_array_equal(dense, _from_voxels(st, dtype, corner, extent, t_range))
+
+
+@pytest.mark.parametrize("dtype", DTYPES)
+def test_filter_ids_match_voxel_path(channels, dtype):
+    st, vols = channels[dtype]
+    corner, extent = BOXES[0]
+    t_range = (0, 3)
+    present = np.unique(vols[2][vols[2] != 0])[:3].astype(np.int64).tolist()
+    if dtype == "uint64":
+        present.append(-1)  # wrapped form of 2**64 - 1
+    absent = [12345] if dtype == "uint64" else [int(np.iinfo(dtype).max)]
+    written = np.concatenate([v.ravel() for v in vols.values()]).astype(np.int64)
+    assert not np.isin(written, absent).any()
+    for ids in (present, absent, []):
+        dense = st.cutout(corner, extent, time_sample_range=t_range, filter_ids=ids)
+        np.testing.assert_array_equal(dense, _expected(vols, dtype, corner, extent, t_range, ids))
+        np.testing.assert_array_equal(
+            dense, _from_voxels(st, dtype, corner, extent, t_range, ids)
+        )
+    kept = st.cutout(corner, extent, time_sample_range=t_range, filter_ids=present)
+    assert kept.any()
+    if dtype == "uint64":
+        assert (kept == np.uint64(2**64 - 1)).sum() == len(WRITTEN_T)
+
+
+@pytest.mark.parametrize("dtype", DTYPES)
+def test_absent_only_box_and_missing_time_step(channels, dtype):
+    st, _ = channels[dtype]
+    out = st.cutout(*EMPTY_BOX, time_sample_range=(0, 3))
+    assert out.shape == (3, 10, 20, 30) and out.dtype == np.dtype(dtype) and not out.any()
+    corner, extent = BOXES[1]
+    assert not st.cutout(corner, extent, time_sample_range=(1, 2)).any()
+
+
+def test_concurrent_pastes_lose_no_block(channels):
+    """Decode-pool workers paste into one shared output array; forcing
+    frequent thread switches must not drop or mix up any block."""
+    st, vols = channels["uint8"]
+    corner, extent = BOXES[0]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(3):
+            out = st.cutout(corner, extent, time_sample_range=(0, 3))
+            np.testing.assert_array_equal(out, _expected(vols, "uint8", corner, extent, (0, 3)))
+    finally:
+        sys.setswitchinterval(old)
+
+
+def test_dense_reads_never_decode_to_voxel_rows(channels, spark, tmp_path, monkeypatch):
+    from spdb_spark.operators.render import png_decode
+
+    sdb = SpatialDB(spark, str(tmp_path / "sdb"))
+    r = make_resource("guard", "image", "uint8")
+    img = np.random.default_rng(5).integers(1, 250, size=(16, 64, 96)).astype("uint8")
+    sdb.write_cuboid(r, (500, 0, 0), 0, img)  # spans x_idx 0|1
+
+    def boom(*args, **kwargs):
+        raise AssertionError("dense read decoded to voxel rows")
+
+    monkeypatch.setattr(store_mod, "blocks_to_voxels", boom)
+    st, vols = channels["uint16"]
+    corner, extent = BOXES[0]
+    np.testing.assert_array_equal(
+        st.cutout(corner, extent, time_sample_range=(0, 3), filter_ids=[]),
+        np.zeros((3, *extent[::-1]), dtype="uint16"),
+    )
+    np.testing.assert_array_equal(
+        st.cutout(corner, extent, time_sample_range=(0, 3)),
+        _expected(vols, "uint16", corner, extent, (0, 3)),
+    )
+    png = sdb.xy_image(r, (510, 3), (60, 50), z_index=7)
+    np.testing.assert_array_equal(png_decode(png), img[7, 3:53, 10:70])

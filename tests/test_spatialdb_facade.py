@@ -94,6 +94,24 @@ def test_downsample_and_offres_annotation_cutout(sdb):
     assert lvl1[0, 0, 0, 0] == 3
 
 
+def test_zoom_in_annotation_cutout_at_odd_corners(sdb):
+    """Below base resolution an annotation cutout replicates base voxels
+    (zoomInData). Corners inside a base cell must still yield the full
+    extent: corner x=3, extent 4 touches three base cells, not two."""
+    r = make_resource("anno5", "annotation", "uint64")
+    r.channel.base_resolution = 1
+    rng = np.random.default_rng(11)
+    base = rng.integers(1, 1000, size=(16, 40, 40)).astype("uint64")
+    sdb.write_cuboid(r, (0, 0, 0), 1, base)
+    zoomed = base.repeat(2, axis=1).repeat(2, axis=2)  # base viewed at res 0
+    boxes = (((3, 5, 2), (4, 7, 5)), ((1, 2, 0), (9, 10, 16)), ((7, 0, 3), (1, 3, 1)))
+    for corner, extent in boxes:
+        (x, y, z), (dx, dy, dz) = corner, extent
+        out = sdb.cutout(r, corner, extent, resolution=0)
+        assert out.shape == (1, dz, dy, dx)
+        np.testing.assert_array_equal(out[0], zoomed[z : z + dz, y : y + dy, x : x + dx])
+
+
 def test_iso_channel_separate_store(sdb):
     r = make_resource("ch_iso")
     data = np.full((16, 64, 64), 9, dtype="uint8")
