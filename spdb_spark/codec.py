@@ -29,14 +29,14 @@ _CODE_DTYPES = {v: k for k, v in _DTYPE_CODES.items()}
 _HEADER = struct.Struct("<4sBHHH")
 
 
-def pack_array(arr: np.ndarray, level: int = 1) -> bytes:
+def pack_array(arr: np.ndarray) -> bytes:
     """Compress one [z, y, x] C-order ndarray into a blob."""
     if arr.ndim != 3:
         raise ValueError(f"expected [z,y,x] 3-d array, got shape {arr.shape}")
     code = _DTYPE_CODES[arr.dtype.name]
     z, y, x = arr.shape
     header = _HEADER.pack(_MAGIC, code, z, y, x)
-    return header + zlib.compress(np.ascontiguousarray(arr).tobytes(), level)
+    return header + zlib.compress(np.ascontiguousarray(arr).tobytes(), level=1)
 
 
 def unpack_array(blob: bytes) -> np.ndarray:
@@ -98,71 +98,6 @@ def blocks_to_voxels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         "value": vals[lo:hi],
                     }
                 )
-
-
-def make_merge_voxels_to_blocks(dtype: str, mode: str):
-    """Fused merge+pack kernel: one applyInPandas group = ONE cuboid's
-    voxels from BOTH sides (column `side`: 'o' stored / 'n' incoming),
-    materialized as dense arrays and overlaid with the reference's dense
-    semantics (overwriteDense.c / exceptionDense.c / cube.py to_black),
-    then packed to a blob. Replaces full-outer-join merge + re-block
-    groupBy — three voxel-volume exchanges — with a single exchange on
-    the cuboid key. Inputs are zero-suppressed voxel rows (the decode
-    kernel emits no zeros), so 'old wins where present' == 'old != 0'.
-    A merge that empties the cuboid emits nothing (the cuboid's block
-    row disappears, matching the voxel-path behavior)."""
-    np_dtype = np.dtype(dtype)
-    cx, cy, cz = CUBOID_SIZE
-    if mode not in ("overwrite", "exception", "to_black"):
-        raise ValueError(f"bad merge mode {mode!r}")
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        lookup_key, resolution, t, x_idx, y_idx, z_idx = key
-        old = np.zeros((cz, cy, cx), dtype=np_dtype)
-        new = np.zeros((cz, cy, cx), dtype=np_dtype)
-        for side, arr in (("o", old), ("n", new)):
-            g = pdf[pdf["side"] == side]
-            if len(g):
-                arr[
-                    g["z"].to_numpy() - z_idx * cz,
-                    g["y"].to_numpy() - y_idx * cy,
-                    g["x"].to_numpy() - x_idx * cx,
-                ] = g["value"].to_numpy().astype(np_dtype)
-        if mode == "overwrite":
-            out = np.where(new != 0, new, old)
-        elif mode == "exception":
-            out = np.where(old != 0, old, new)
-        else:  # to_black: erase where the mask is exactly 1
-            out = np.where(new == np_dtype.type(1), np_dtype.type(0), old)
-        if not out.any():
-            return pd.DataFrame(
-                {
-                    "lookup_key": pd.Series([], dtype=object),
-                    "resolution": pd.Series([], dtype="int32"),
-                    "t": pd.Series([], dtype="int64"),
-                    "morton": pd.Series([], dtype="int64"),
-                    "x_idx": pd.Series([], dtype="int32"),
-                    "y_idx": pd.Series([], dtype="int32"),
-                    "z_idx": pd.Series([], dtype="int32"),
-                    "blob": pd.Series([], dtype=object),
-                }
-            )
-        from spdb_spark.morton import xyz_morton
-
-        return pd.DataFrame(
-            {
-                "lookup_key": [lookup_key],
-                "resolution": [np.int32(resolution)],
-                "t": [np.int64(t)],
-                "morton": [np.int64(xyz_morton(x_idx, y_idx, z_idx))],
-                "x_idx": [np.int32(x_idx)],
-                "y_idx": [np.int32(y_idx)],
-                "z_idx": [np.int32(z_idx)],
-                "blob": [pack_array(out)],
-            }
-        )
-
-    return kernel
 
 
 def make_voxels_to_blocks(dtype: str):

@@ -154,6 +154,10 @@ class SpatialDB:
             raise ValueError(
                 f"writes must target base resolution {base} (or {base + 1}), got {resolution}"
             )
+        if resource.channel.downsample_status == "DOWNSAMPLED":
+            # the stored pyramid no longer matches the base level
+            resource.channel.downsample_status = "NOT_DOWNSAMPLED"
+            self.register(resource)
         self._store(resource, iso).write_cuboid(
             cuboid_data,
             corner,

@@ -12,11 +12,14 @@ rewrite ONLY the super-blocks they touch, so write cost tracks the write,
 not the channel size (the plain-parquet stand-in for Delta MERGE file
 granularity).
 
-Write path parity (spatialdb.py:719-867): input array -> tiles -> merge into
-store with non-zero-overwrite (overwriteDense.c), fill-only
-(exceptionDense.c) or to_black erase (cube.py:264-291) semantics, one
-atomic partition rewrite (Delta/Iceberg MERGE INTO in production — plain
-parquet dynamic-partition-overwrite here since the container has no Delta).
+Write path parity (spatialdb.py:719-867): a dense merge per cuboid on the
+driver, like the reads. The stored blobs the box overlaps are fetched and
+decoded, the box slice is overlaid with non-zero-overwrite
+(overwriteDense.c), fill-only (exceptionDense.c) or to_black erase
+(cube.py:264-291) semantics, and the results are packed and committed with
+the untouched rows of their super-blocks in one partition rewrite
+(Delta/Iceberg MERGE INTO in production — plain parquet
+dynamic-partition-overwrite here).
 
 Read path parity (spatialdb.py:360-717): box -> covering cuboid range filter
 (partition+stats pruning). Dense `cutout` is block-level with driver
@@ -44,7 +47,6 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from spdb_spark.codec import (
     blocks_to_voxels,
-    make_merge_voxels_to_blocks,
     make_voxels_to_blocks,
     pack_array,
     unpack_array,
@@ -88,6 +90,26 @@ def _overlap(
         in_cuboid.append(slice(lo - i * n, hi - i * n))
         in_box.append(slice(lo - c, hi - c))
     return tuple(in_cuboid[::-1]), tuple(in_box[::-1])
+
+
+def _merge(view: np.ndarray, piece: np.ndarray, mode: str) -> None:
+    """Overlay `piece` onto the stored cuboid slice `view` in place, with the
+    reference's dense merge semantics: overwriteDense.c, exceptionDense.c
+    and the to_black erase (cube.py:264-291)."""
+    if mode == "overwrite":
+        np.copyto(view, piece, where=piece != 0)
+    elif mode == "exception":
+        np.copyto(view, piece, where=view == 0)
+    elif mode == "to_black":
+        view[piece == 1] = 0
+    else:
+        raise ValueError(f"bad mode {mode!r}")
+
+
+def _on_pool(fn: Callable, items) -> list:
+    """fn(item) for each item, on the driver decode pool."""
+    with ThreadPoolExecutor(_DECODE_THREADS) as pool:
+        return list(pool.map(fn, items))
 
 
 def _with_pgroup(df: DataFrame) -> DataFrame:
@@ -195,31 +217,6 @@ class CuboidStore:
 
     # -- write path ---------------------------------------------------------
 
-    def _array_to_block_rows(
-        self,
-        data: np.ndarray,
-        corner: Sequence[int],
-        resolution: int,
-        time_sample_start: int,
-    ) -> list[tuple]:
-        """Tile a [t,z,y,x] (or [z,y,x]) array into padded cuboid rows
-        (driver-side numpy slicing — the array already lives on the driver,
-        like the reference's write_cuboid input, spatialdb.py:754-788)."""
-        if data.ndim == 3:
-            data = data[None, ...]
-        if data.ndim != 4:
-            raise ValueError(f"expected [t,z,y,x] or [z,y,x], got {data.shape}")
-        extent = data.shape[:0:-1]
-        rows = []
-        for ti in range(data.shape[0]):
-            for zi, yi, xi in product(*_cuboid_ranges(corner, extent)[::-1]):
-                tile = np.zeros((CUBOID_Z, CUBOID_Y, CUBOID_X), dtype=self.datatype)
-                in_cuboid, in_box = _overlap(corner, extent, (xi, yi, zi))
-                tile[in_cuboid] = data[ti][in_box]
-                rows.append((self.lookup_key, resolution, time_sample_start + ti,
-                             xyz_morton(xi, yi, zi), xi, yi, zi, bytearray(pack_array(tile))))
-        return rows
-
     def write_cuboid(
         self,
         data: np.ndarray,
@@ -228,70 +225,55 @@ class CuboidStore:
         time_sample_start: int = 0,
         mode: str = "overwrite",
     ) -> None:
-        """THE write operator (reference: spatialdb.py:719-867). Modes:
+        """THE write operator (reference: spatialdb.py:719-867): merge a
+        [t,z,y,x] (or [z,y,x]) array into the store at `corner`. Modes:
         'overwrite' — non-zero input voxels overwrite (overwriteDense.c);
         'exception' — input lands only where store is 0 (exceptionDense.c);
-        'to_black'  — store voxels erased where input == 1 (cube.py:264-291);
-        'replace'   — whole cuboids replaced (bulk ingest fast path).
-        """
-        if mode not in ("overwrite", "exception", "to_black", "replace"):
+        'to_black'  — store voxels erased where input == 1 (cube.py:264-291).
+
+        Dense driver merge: the stored blobs of the cuboids the box covers
+        are fetched and decoded (absent ones start as zero tiles; to_black
+        skips them), the box slice is overlaid with `_merge`, and the results
+        are packed on the decode pool. A cuboid that merges to all zeros is
+        not stored. The other rows of the touched super-blocks pass through
+        as blobs into the same commit."""
+        if mode not in ("overwrite", "exception", "to_black"):
             raise ValueError(f"bad mode {mode!r}")
-        rows = self._array_to_block_rows(data, corner, resolution, time_sample_start)
-        new_blocks = _with_pgroup(self.spark.createDataFrame(rows, CUBOID_SCHEMA))
-        # only the touched super-blocks are read and rewritten
-        touched = sorted({r[3] >> PGROUP_SHIFT for r in rows})
+        data = np.asarray(data).astype(self.datatype, copy=False)
+        if data.ndim == 3:
+            data = data[None, ...]
+        if data.ndim != 4:
+            raise ValueError(f"expected [t,z,y,x] or [z,y,x], got {data.shape}")
+        extent = data.shape[:0:-1]
+        t0, t1 = time_sample_start, time_sample_start + data.shape[0]
+        cuboids = {xyz_morton(*idx): idx for idx in product(*_cuboid_ranges(corner, extent))}
+
+        def merge(t: int, morton: int, cube: np.ndarray) -> tuple:
+            """Overlay the box slice at time t onto one cuboid and pack it
+            (the row is None when the cuboid merges to all zeros)."""
+            idx = cuboids[morton]
+            in_cuboid, in_box = _overlap(corner, extent, idx)
+            _merge(cube[in_cuboid], data[t - t0][in_box], mode)
+            row = None
+            if cube.any():
+                row = (self.lookup_key, resolution, t, morton, *idx, pack_array(cube))
+            return (t, morton), row
+
+        touched = sorted({m >> PGROUP_SHIFT for m in cuboids})
         existing = self.blocks(resolution, pgroups=touched)
-
-        if mode == "replace" or not self._exists():
-            merged = existing.join(
-                new_blocks.select("t", "morton").distinct(),
-                on=["t", "morton"],
-                how="left_anti",
-            ).unionByName(new_blocks)
-        else:
-            # voxel-level merge only for cuboids present on BOTH sides;
-            # everything else passes through block-level (no decode cost).
-            keys = new_blocks.select("t", "morton").distinct()
-            overlap_old = existing.join(keys, ["t", "morton"], "left_semi")
-            rest_old = existing.join(keys, ["t", "morton"], "left_anti")
-            old_keys = existing.select("t", "morton").distinct()
-            overlap_new = new_blocks.join(old_keys, ["t", "morton"], "left_semi")
-            fresh_new = new_blocks.join(old_keys, ["t", "morton"], "left_anti")
-
-            # Fused merge+pack: decode both sides, tag them, and resolve
-            # each cuboid in ONE grouped Arrow task that overlays dense
-            # arrays with the reference's dense-merge semantics
-            # (overwriteDense.c et al.) and packs the result. The prior
-            # shape — full-outer join on the voxel key, then a re-block
-            # groupBy — exchanged the voxel volume three times; this
-            # exchanges it once, keyed by cuboid.
-            ov = overlap_old.mapInPandas(blocks_to_voxels, VOXEL_SCHEMA).withColumn(
-                "side", F.lit("o")
-            )
-            nv = overlap_new.mapInPandas(blocks_to_voxels, VOXEL_SCHEMA).withColumn(
-                "side", F.lit("n")
-            )
-            both = ov.unionByName(nv).select(
-                F.lit(self.lookup_key).alias("lookup_key"),
-                F.lit(resolution).alias("resolution"),
-                "t", "x", "y", "z", "value", "side",
-                F.floor(F.col("x") / CUBOID_X).cast("int").alias("x_idx"),
-                F.floor(F.col("y") / CUBOID_Y).cast("int").alias("y_idx"),
-                F.floor(F.col("z") / CUBOID_Z).cast("int").alias("z_idx"),
-            )
-            kernel = make_merge_voxels_to_blocks(self.datatype, mode)
-            merged_overlap = _with_pgroup(
-                both.groupBy(
-                    "lookup_key", "resolution", "t", "x_idx", "y_idx", "z_idx"
-                ).applyInPandas(kernel, CUBOID_SCHEMA)
-            )
-            if mode == "to_black":
-                # fresh cuboids of an erase mask write nothing
-                merged = rest_old.unionByName(merged_overlap)
-            else:
-                merged = rest_old.unionByName(merged_overlap).unionByName(fresh_new)
-
-        self._commit(merged, resolution, touched=touched)
+        hit = F.col("t").between(t0, t1 - 1) & F.col("morton").isin(list(cuboids))
+        merged = dict(self._each_block(
+            existing.where(hit), ["t", "morton"],
+            lambda r, arr: merge(int(r.t), int(r.morton), arr.copy()),
+        ))
+        if mode != "to_black":
+            shape = (CUBOID_Z, CUBOID_Y, CUBOID_X)
+            absent = [k for k in product(range(t0, t1), cuboids) if k not in merged]
+            merged.update(_on_pool(lambda k: merge(*k, np.zeros(shape, self.datatype)), absent))
+        # (t, morton) order: each staged file holds a contiguous Morton run
+        rows = [merged[k] for k in sorted(merged) if merged[k] is not None]
+        new_blocks = _with_pgroup(self.spark.createDataFrame(rows, CUBOID_SCHEMA))
+        self._commit(existing.where(~hit).unionByName(new_blocks), resolution, touched=touched)
 
     def _voxels_to_blocks(self, voxels: DataFrame, resolution: int) -> DataFrame:
         kernel = make_voxels_to_blocks(self.datatype)
@@ -384,20 +366,7 @@ class CuboidStore:
         if n == 0:
             return
         num_files = max(1, -(-n // blocks_per_file))
-        staged = blocks.repartitionByRange(
-            num_files, "pgroup", "morton", "t"
-        ).sortWithinPartitions("pgroup", "morton", "t")
-        # stage-to-disk then publish, same safety story as _commit
-        stage_dir = f"{self.path}.stage-{uuid.uuid4().hex[:12]}"
-        try:
-            (
-                staged.write.mode("overwrite")
-                .partitionBy("lookup_key", "resolution", "pgroup")
-                .parquet(stage_dir)
-            )
-            self.committer.publish(self, stage_dir)
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
+        self._commit(blocks.repartitionByRange(num_files, "pgroup", "morton", "t"), resolution)
 
     # -- resolution hierarchy ------------------------------------------------
 
@@ -482,10 +451,7 @@ class CuboidStore:
         pool. Arrays live only inside `fn`, so a `fn` that consumes them
         keeps extra memory at about one cuboid per thread."""
         pdf = blocks.select(*cols, "blob").toPandas()
-        with ThreadPoolExecutor(_DECODE_THREADS) as pool:
-            return list(
-                pool.map(lambda r: fn(r, unpack_array(r.blob)), pdf.itertuples(index=False))
-            )
+        return _on_pool(lambda r: fn(r, unpack_array(r.blob)), pdf.itertuples(index=False))
 
     def cutout_voxels(
         self,

@@ -31,58 +31,43 @@ def test_compression_shrinks_sparse():
     assert len(blob) < arr.nbytes / 100
 
 
-def test_merge_kernel_truth_tables():
-    """make_merge_voxels_to_blocks as a pure function: dense-overlay
-    semantics per mode, empty-result suppression, and blob round-trip."""
-    import numpy as np
-    import pandas as pd
+def test_merge_truth_tables(spark, tmp_path):
+    """store._merge, the dense overlay of a write onto a stored cuboid:
+    semantics per mode, uint64 ids, bad modes, and a merge that empties a
+    cuboid storing no block row."""
+    from spdb_spark.store import CuboidStore, _merge
 
-    from spdb_spark.codec import make_merge_voxels_to_blocks, unpack_array
+    def merged(old, new, mode, dtype="uint8"):
+        view = np.zeros((4, 4, 4), dtype=dtype)
+        piece = np.zeros((4, 4, 4), dtype=dtype)
+        for arr, voxels in ((view, old), (piece, new)):
+            for (x, y, z), v in voxels.items():
+                arr[z, y, x] = v
+        _merge(view, piece, mode)
+        return view
 
-    key = ("chan&0", 0, 0, 0, 0, 0)
-
-    def pdf(rows):
-        # rows: (side, x, y, z, value)
-        return pd.DataFrame(
-            {
-                "side": [r[0] for r in rows],
-                "x": [r[1] for r in rows],
-                "y": [r[2] for r in rows],
-                "z": [r[3] for r in rows],
-                "value": [r[4] for r in rows],
-            }
-        )
-
-    k_ov = make_merge_voxels_to_blocks("uint8", "overwrite")
-    out = k_ov(key, pdf([("o", 1, 1, 1, 5), ("o", 2, 2, 2, 6), ("n", 1, 1, 1, 9), ("n", 3, 3, 3, 7)]))
-    arr = unpack_array(out["blob"][0])
+    arr = merged({(1, 1, 1): 5, (2, 2, 2): 6}, {(1, 1, 1): 9, (3, 3, 3): 7}, "overwrite")
     assert arr[1, 1, 1] == 9 and arr[2, 2, 2] == 6 and arr[3, 3, 3] == 7
-    assert int(out["morton"][0]) == 0
 
-    k_ex = make_merge_voxels_to_blocks("uint8", "exception")
-    arr = unpack_array(
-        k_ex(key, pdf([("o", 1, 1, 1, 5), ("n", 1, 1, 1, 9), ("n", 3, 3, 3, 7)]))["blob"][0]
-    )
+    arr = merged({(1, 1, 1): 5}, {(1, 1, 1): 9, (3, 3, 3): 7}, "exception")
     assert arr[1, 1, 1] == 5 and arr[3, 3, 3] == 7  # old wins, gaps fill
 
-    k_tb = make_merge_voxels_to_blocks("uint8", "to_black")
-    arr = unpack_array(
-        k_tb(key, pdf([("o", 1, 1, 1, 5), ("o", 2, 2, 2, 6), ("n", 1, 1, 1, 1)]))["blob"][0]
-    )
-    assert arr[1, 1, 1] == 0 and arr[2, 2, 2] == 6  # mask==1 erases
-
-    # a merge that empties the cuboid emits NO block row
-    empty = k_tb(key, pdf([("o", 1, 1, 1, 5), ("n", 1, 1, 1, 1)]))
-    assert len(empty) == 0
+    arr = merged({(1, 1, 1): 5, (2, 2, 2): 6}, {(1, 1, 1): 1, (2, 2, 2): 2}, "to_black")
+    assert arr[1, 1, 1] == 0 and arr[2, 2, 2] == 6  # only mask == 1 erases
 
     # uint64 boundary ids survive the overlay bit-exactly
-    k64 = make_merge_voxels_to_blocks("uint64", "overwrite")
     big = 2**63 - 1
-    out = k64(key, pdf([("o", 0, 0, 0, big), ("n", 4, 4, 4, big - 1)]))
-    arr = unpack_array(out["blob"][0])
-    assert arr[0, 0, 0] == np.uint64(big) and arr[4, 4, 4] == np.uint64(big - 1)
-
-    import pytest
+    arr = merged({(0, 0, 0): big}, {(3, 3, 3): big - 1}, "overwrite", "uint64")
+    assert arr[0, 0, 0] == np.uint64(big) and arr[3, 3, 3] == np.uint64(big - 1)
 
     with pytest.raises(ValueError):
-        make_merge_voxels_to_blocks("uint8", "bogus")
+        merged({}, {}, "bogus")
+
+    # a merge that empties the cuboid stores NO block row
+    store = CuboidStore(spark, str(tmp_path / "blocks"), datatype="uint8")
+    data = np.zeros((4, 4, 4), dtype="uint8")
+    data[1, 1, 1] = 5
+    store.write_cuboid(data, (0, 0, 0))
+    assert store.blocks().count() == 1
+    store.write_cuboid(np.ones_like(data), (0, 0, 0), mode="to_black")
+    assert store.blocks().count() == 0

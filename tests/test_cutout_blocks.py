@@ -1,7 +1,8 @@
 """Block-level dense cutout: `CuboidStore.cutout` decodes, crops and pastes
 cuboid blobs on the driver. It must agree with the distributed voxel path
 (`cutout_voxels`) and with the numpy arrays that were written, and it must
-never decode to voxel rows.
+never decode to voxel rows. `write_cuboid` merges on the same blocks and
+must never decode to voxel rows either.
 
 The data is written once per module: per channel dtype, two time samples
 (t=0 and t=2; t=1 is never written) of a sparse random volume spanning
@@ -180,3 +181,44 @@ def test_dense_reads_never_decode_to_voxel_rows(channels, spark, tmp_path, monke
     )
     png = sdb.xy_image(r, (510, 3), (60, 50), z_index=7)
     np.testing.assert_array_equal(png_decode(png), img[7, 3:53, 10:70])
+
+    # writes in every merge mode, against the same merges done in numpy
+    wst = CuboidStore(spark, str(tmp_path / "writes"), datatype="uint16")
+    origin = (CUBOID_X - 16, 0, 8)  # the box crosses x_idx 0|1 and z_idx 0|1
+    truth = np.zeros((16, 8, 32), dtype="uint16")  # [z,y,x] from origin
+    rng = np.random.default_rng(6)
+    for mode, (x, y, z), (dz, dy, dx) in (
+        ("overwrite", (0, 0, 0), truth.shape),
+        ("overwrite", (5, 1, 3), (9, 6, 20)),
+        ("exception", (2, 0, 6), (10, 8, 25)),
+        ("to_black", (0, 2, 1), (14, 5, 30)),
+    ):
+        data = rng.integers(0, 4, size=(dz, dy, dx)).astype("uint16")  # 0, erase 1, keep 2
+        wst.write_cuboid(data, (origin[0] + x, origin[1] + y, origin[2] + z), mode=mode)
+        view = truth[z : z + dz, y : y + dy, x : x + dx]
+        where = {"overwrite": data != 0, "exception": view == 0, "to_black": data == 1}[mode]
+        view[where] = 0 if mode == "to_black" else data[where]
+        np.testing.assert_array_equal(wst.cutout(origin, truth.shape[::-1])[0], truth)
+
+
+def test_emptied_and_all_zero_cuboids_store_no_rows(spark, tmp_path):
+    from spdb_spark.morton import xyz_morton
+
+    st = CuboidStore(spark, str(tmp_path / "blocks"), datatype="uint64")
+    a = np.zeros((4, 8, 8), dtype="uint64")
+    a[1, 2, 3] = 2**63 + 1
+    b = np.full((4, 8, 8), 9, dtype="uint64")
+    st.write_cuboid(a, (0, 0, 0))
+    st.write_cuboid(b, (CUBOID_X, 0, 0))  # neighbour cuboid, same pgroup
+    assert st.blocks().count() == 2
+    # a to_black erase that empties one cuboid drops its row
+    st.write_cuboid(np.ones_like(a), (0, 0, 0), mode="to_black")
+    assert [r.morton for r in st.blocks().collect()] == [xyz_morton(1, 0, 0)]
+    assert not st.cutout((0, 0, 0), (8, 8, 4)).any()
+    np.testing.assert_array_equal(st.cutout((CUBOID_X, 0, 0), (8, 8, 4))[0], b)
+    # an all-zero overwrite into an empty region stores nothing
+    st.write_cuboid(np.zeros_like(a), (5 * CUBOID_X, 0, 0))
+    assert st.blocks().count() == 1
+    with pytest.raises(ValueError):
+        st.write_cuboid(a, (0, 0, 0), mode="replace")
+    assert st.blocks().count() == 1

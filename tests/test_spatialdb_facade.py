@@ -94,6 +94,23 @@ def test_downsample_and_offres_annotation_cutout(sdb):
     assert lvl1[0, 0, 0, 0] == 3
 
 
+def test_write_after_downsample_resets_status(sdb):
+    """A base write after a pyramid build makes the stored levels stale: the
+    channel goes back to NOT_DOWNSAMPLED (durably), so an off-base
+    annotation cutout resamples the new base data instead of reading the
+    old level."""
+    r = make_resource("anno6", "annotation", "uint64", levels=2)
+    data = np.zeros((16, 8, 8), dtype="uint64")
+    data[0, 0:2, 0:2] = 7
+    sdb.write_cuboid(r, (0, 0, 0), 0, data)
+    sdb.downsample(r)
+    assert sdb.cutout(r, (0, 0, 0), (4, 4, 16), resolution=1)[0, 0, 0, 0] == 7
+    sdb.write_cuboid(r, (0, 0, 0), 0, data + (data != 0) * np.uint64(2))
+    assert r.channel.downsample_status == "NOT_DOWNSAMPLED"
+    assert sdb.load_resource(r.lookup_key).channel.downsample_status == "NOT_DOWNSAMPLED"
+    assert sdb.cutout(r, (0, 0, 0), (4, 4, 16), resolution=1)[0, 0, 0, 0] == 9
+
+
 def test_zoom_in_annotation_cutout_at_odd_corners(sdb):
     """Below base resolution an annotation cutout replicates base voxels
     (zoomInData). Corners inside a base cell must still yield the full
