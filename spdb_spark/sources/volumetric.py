@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spdb_spark.schema import VOXEL_SCHEMA
-from spdb_spark.store import CuboidStore
+from spdb_spark.store import CuboidStore, _with_pgroup, writing
 
 
 def ingest_npy(
@@ -74,11 +74,10 @@ def ingest_voxel_files(
         .withColumn("lookup_key", F.lit(store.lookup_key))
         .withColumn("resolution", F.lit(resolution))
     )
-    from spdb_spark.store import _with_pgroup
-
     new_blocks = _with_pgroup(store._voxels_to_blocks(vox, resolution))
-    existing = store.blocks(resolution)
-    merged = existing.join(
-        new_blocks.select("t", "morton").distinct(), ["t", "morton"], "left_anti"
-    ).unionByName(new_blocks)
-    store._commit(merged, resolution)
+    with writing(store.path):
+        existing = store.blocks(resolution)
+        merged = existing.join(
+            new_blocks.select("t", "morton").distinct(), ["t", "morton"], "left_anti"
+        ).unionByName(new_blocks)
+        store._commit(merged, resolution)

@@ -15,9 +15,13 @@ Method parity (reference signature -> here):
 - downsample(resource, ...)                the external downsample pipeline
 
 Differences (deliberate, documented): no cache/dirty-read machinery
-(snapshot reads make access_mode a no-op), dynamic resample of
-off-base-resolution annotation cutouts is IMPLEMENTED via the zoom
-operators (the reference raises NotImplemented, spatialdb.py:410-431).
+(access_mode is a no-op: every read goes to the published table). Writers
+of a channel are serialized by a file lock and publish through a
+crash-safe partition swap (store.OverwritePublisher.publish), so every
+acknowledged write is durable; readers are not isolated from a swap in
+progress and can briefly miss a super-block being replaced. Dynamic
+resample of off-base-resolution annotation cutouts is IMPLEMENTED via the
+zoom operators (the reference raises NotImplemented, spatialdb.py:410-431).
 """
 
 from __future__ import annotations
@@ -101,7 +105,8 @@ class SpatialDB:
         access_mode: str = "cache",
     ) -> np.ndarray:
         """Dense [t,z,y,x] box read. access_mode accepted for signature
-        parity; snapshot reads make cache/no_cache/raw identical."""
+        parity; with no cache tier, cache/no_cache/raw read the same
+        published table (not isolated from a write's swap in progress)."""
         del access_mode
         store = self._store(resource, iso)
         base = resource.channel.base_resolution

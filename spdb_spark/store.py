@@ -18,8 +18,11 @@ decoded, the box slice is overlaid with non-zero-overwrite
 (overwriteDense.c), fill-only (exceptionDense.c) or to_black erase
 (cube.py:264-291) semantics, and the results are packed and committed with
 the untouched rows of their super-blocks in one partition rewrite
-(Delta/Iceberg MERGE INTO in production — plain parquet
-dynamic-partition-overwrite here).
+(Delta/Iceberg MERGE INTO in production). Writers of a table are
+serialized by a file lock, and the rewrite is staged beside the table and
+swapped in per partition without ever deleting the only copy
+(`OverwritePublisher.publish`, `recover`): the reference's locked page-out
+(state.py:332-380) in plain files.
 
 Read path parity (spatialdb.py:360-717): box -> covering cuboid range filter
 (partition+stats pruning). Dense `cutout` is block-level with driver
@@ -31,12 +34,14 @@ Absent cuboids are implicit zeros (zero-suppression, spatialdb.py:571-585).
 
 from __future__ import annotations
 
+import fcntl
 import glob
 import os
 import shutil
 import uuid
 from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from itertools import product
 from urllib.parse import unquote
 
@@ -64,6 +69,10 @@ PGROUP_SHIFT = 12
 _DECODE_THREADS = (
     len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
 )
+
+# Spark's default spark.sql.files.openCostInBytes: below this many bytes a
+# write does not stage in another task (and file).
+_FILE_OPEN_COST = 4 << 20
 
 # NOTE: StructType.add mutates in place — build the read schema by copy.
 _READ_SCHEMA = StructType(
@@ -118,6 +127,11 @@ def _with_pgroup(df: DataFrame) -> DataFrame:
     )
 
 
+def _dir_bytes(path: str | None) -> int:
+    """Bytes of the files directly under `path` (0 for None)."""
+    return sum(e.stat().st_size for e in os.scandir(path)) if path else 0
+
+
 def _list_partition_dirs(root: str) -> dict[tuple[str, int, int], str]:
     """Map (lookup_key, resolution, pgroup) -> partition directory under a
     Hive-layout parquet table root. Values are unescaped the way Spark
@@ -131,40 +145,99 @@ def _list_partition_dirs(root: str) -> dict[tuple[str, int, int], str]:
 
 
 class OverwritePublisher:
-    """Publish staged partitions via Spark dynamic partition overwrite —
-    the plain-parquet stand-in for a table-format MERGE commit. Reads the
-    already-materialized stage files, never the table being replaced, so a
-    mid-write executor recompute can't race the overwrite's deletes."""
+    """Holder of the engine's one publish. `publish` stays a class attribute
+    because perfbench's tracer wraps `OverwritePublisher.publish` by name;
+    call it through the class."""
 
-    def publish(self, store: "CuboidStore", stage_dir: str) -> None:
-        staged = (
-            store.spark.read.option("basePath", stage_dir).parquet(stage_dir)
-        )
-        (
-            staged.write.mode("overwrite")
-            .partitionBy("lookup_key", "resolution", "pgroup")
-            .parquet(store.path)
-        )
+    @staticmethod
+    def publish(
+        table_path: str, stage_dir: str, touched: Sequence[tuple[str, int, int]] = ()
+    ) -> None:
+        """Swap each staged partition of `stage_dir` into the Hive-layout
+        table at `table_path`, and drop each `touched` partition that
+        staged no rows. No step deletes the only copy of a partition: the
+        old one is renamed into `{table}.trash-<token>` first, the staged
+        one is renamed in, and the trash is deleted last (after a rename
+        to `.done` marks the publish complete). A crash in between leaves
+        the old data in the trash for `recover`. Readers that list the
+        table during a publish can see a partition briefly absent."""
+        staged = _list_partition_dirs(stage_dir)
+        table_dirs = _list_partition_dirs(table_path)
+        trash_dir = f"{table_path}.trash-{uuid.uuid4().hex[:12]}"
+        for key in sorted(set(staged) | set(touched)):
+            src, dest = staged.get(key), table_dirs.get(key)
+            if dest is not None:
+                aside = os.path.join(trash_dir, os.path.relpath(dest, table_path))
+                os.makedirs(os.path.dirname(aside), exist_ok=True)
+                os.rename(dest, aside)
+            if src is not None:
+                dest = dest or os.path.join(table_path, os.path.relpath(src, stage_dir))
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
+                os.rename(src, dest)
+            elif dest is not None:
+                # dropped: remove the lookup_key=/resolution= parents it
+                # leaves empty (rmdir never removes a non-empty dir)
+                for parent in (os.path.dirname(dest), os.path.dirname(os.path.dirname(dest))):
+                    try:
+                        os.rmdir(parent)
+                    except OSError:
+                        break
+        if os.path.isdir(trash_dir):
+            os.rename(trash_dir, f"{trash_dir}.done")
+            shutil.rmtree(f"{trash_dir}.done")
 
 
-class SwapPublisher:
-    """Publish staged partitions by moving each staged partition directory
-    into the table root (file-granularity replace, the shape of a
-    Delta/Iceberg commit: new files swapped in, old files dropped, per
-    touched partition only). Proves CuboidStore's commit seam is
-    committer-agnostic (SURVEY §6 / SCALE.md claim)."""
+def recover(table_path: str) -> None:
+    """Finish or undo any interrupted publish of the table. A trash entry
+    whose table partition is missing means the crash hit between the
+    move-aside and the swap (or a drop): the trash copy is the only one,
+    so it goes back. Otherwise the trash copy is superseded and is deleted,
+    as is every `.done` trash. A write whose publish crashed may so end up
+    applied to some super-blocks and not others; every merge mode is
+    idempotent, so running it again converges."""
+    for trash in glob.glob(f"{glob.escape(table_path)}.trash-*"):
+        if not trash.endswith(".done"):
+            table_dirs = _list_partition_dirs(table_path)
+            for key, src in _list_partition_dirs(trash).items():
+                if key not in table_dirs:
+                    dest = os.path.join(table_path, os.path.relpath(src, trash))
+                    os.makedirs(os.path.dirname(dest), exist_ok=True)
+                    os.rename(src, dest)
+        shutil.rmtree(trash)
 
-    def publish(self, store: "CuboidStore", stage_dir: str) -> None:
-        table_dirs = _list_partition_dirs(store.path)
-        for key, src in _list_partition_dirs(stage_dir).items():
-            dest = table_dirs.get(key)
-            if dest is None:
-                rel = os.path.relpath(src, stage_dir)
-                dest = os.path.join(store.path, rel)
-            if os.path.isdir(dest):
-                shutil.rmtree(dest)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(src, dest)
+
+def stage_and_publish(
+    table_path: str, rows: DataFrame, touched: Sequence[tuple[str, int, int]] = ()
+) -> None:
+    """Rewrite the (lookup_key, resolution, pgroup) partitions of `rows`
+    in two steps: (1) stage them to a fresh directory beside the table,
+    fully materialized before any table file moves, so the publish never
+    recomputes from files it replaces; (2) swap them in with
+    `OverwritePublisher.publish`, which also drops the `touched`
+    partitions that staged no rows. Callers hold `writing(table_path)`."""
+    stage_dir = f"{table_path}.stage-{uuid.uuid4().hex[:12]}"
+    try:
+        rows.write.partitionBy("lookup_key", "resolution", "pgroup").parquet(stage_dir)
+        OverwritePublisher.publish(table_path, stage_dir, touched)
+    finally:
+        shutil.rmtree(stage_dir, ignore_errors=True)
+
+
+@contextmanager
+def writing(table_path: str):
+    """Serialize the writers of one table: hold an exclusive flock on
+    `{table}.lock` (opened per call, so threads of one process exclude
+    each other too), then `recover`. The caller reads, merges, stages and
+    publishes inside, so its merge starts from the last published state
+    and no other writer publishes over it."""
+    os.makedirs(os.path.dirname(table_path) or ".", exist_ok=True)
+    with open(f"{table_path}.lock", "w") as lockf:
+        fcntl.flock(lockf, fcntl.LOCK_EX)
+        try:
+            recover(table_path)
+            yield
+        finally:
+            fcntl.flock(lockf, fcntl.LOCK_UN)
 
 
 class CuboidStore:
@@ -174,14 +247,11 @@ class CuboidStore:
         path: str,
         datatype: str = "uint8",
         lookup_key: str = "4&3&2",
-        committer=None,
     ):
         self.spark = spark
         self.path = path
         self.datatype = datatype
         self.lookup_key = lookup_key
-        self.committer = committer or OverwritePublisher()
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # -- helpers ------------------------------------------------------------
 
@@ -195,7 +265,10 @@ class CuboidStore:
         pgroup). `pgroups` restricts the scan to those partitions (pruned
         at the file-listing level, never read)."""
         if not self._exists():
-            return _with_pgroup(self.spark.createDataFrame([], CUBOID_SCHEMA))
+            # no partitions (not defaultParallelism empty ones), so a write's
+            # coalesced stage groups only real rows
+            empty = self.spark.sparkContext.emptyRDD()
+            return _with_pgroup(self.spark.createDataFrame(empty, CUBOID_SCHEMA))
         df = (
             self.spark.read.schema(_READ_SCHEMA)
             .option("basePath", self.path)
@@ -260,20 +333,32 @@ class CuboidStore:
             return (t, morton), row
 
         touched = sorted({m >> PGROUP_SHIFT for m in cuboids})
-        existing = self.blocks(resolution, pgroups=touched)
         hit = F.col("t").between(t0, t1 - 1) & F.col("morton").isin(list(cuboids))
-        merged = dict(self._each_block(
-            existing.where(hit), ["t", "morton"],
-            lambda r, arr: merge(int(r.t), int(r.morton), arr.copy()),
-        ))
-        if mode != "to_black":
-            shape = (CUBOID_Z, CUBOID_Y, CUBOID_X)
-            absent = [k for k in product(range(t0, t1), cuboids) if k not in merged]
-            merged.update(_on_pool(lambda k: merge(*k, np.zeros(shape, self.datatype)), absent))
-        # (t, morton) order: each staged file holds a contiguous Morton run
-        rows = [merged[k] for k in sorted(merged) if merged[k] is not None]
-        new_blocks = _with_pgroup(self.spark.createDataFrame(rows, CUBOID_SCHEMA))
-        self._commit(existing.where(~hit).unionByName(new_blocks), resolution, touched=touched)
+        with writing(self.path):
+            existing = self.blocks(resolution, pgroups=touched)
+            merged = dict(self._each_block(
+                existing.where(hit), ["t", "morton"],
+                lambda r, arr: merge(int(r.t), int(r.morton), arr.copy()),
+            ))
+            if mode != "to_black":
+                shape = (CUBOID_Z, CUBOID_Y, CUBOID_X)
+                absent = [k for k in product(range(t0, t1), cuboids) if k not in merged]
+                merged.update(_on_pool(lambda k: merge(*k, np.zeros(shape, self.datatype)), absent))
+            # (t, morton) order: each staged file holds a contiguous Morton run
+            rows = [merged[k] for k in sorted(merged) if merged[k] is not None]
+            new_blocks = _with_pgroup(self.spark.createDataFrame(rows, CUBOID_SCHEMA))
+            # Stage in one task per touched super-block, more where the
+            # bytes exceed a file's open cost each, at most one per core:
+            # small rewrites no longer leave one more file per write, and
+            # large ones still stage in parallel
+            parts = _list_partition_dirs(self.path)
+            nbytes = sum(len(r[-1]) for r in rows) + sum(
+                _dir_bytes(parts.get((self.lookup_key, resolution, pg))) for pg in touched
+            )
+            tasks = max(len(touched), 1 + nbytes // _FILE_OPEN_COST)
+            stage = existing.where(~hit).unionByName(new_blocks)
+            stage = stage.coalesce(min(self.spark.sparkContext.defaultParallelism, tasks))
+            self._commit(stage, resolution, touched)
 
     def _voxels_to_blocks(self, voxels: DataFrame, resolution: int) -> DataFrame:
         kernel = make_voxels_to_blocks(self.datatype)
@@ -294,49 +379,14 @@ class CuboidStore:
         ).applyInPandas(kernel, CUBOID_SCHEMA)
 
     def _commit(
-        self,
-        blocks: DataFrame,
-        resolution: int,
-        touched: Sequence[int] | None = None,
+        self, blocks: DataFrame, resolution: int, touched: Sequence[int] = ()
     ) -> None:
-        """Super-block rewrite in two steps: (1) stage `blocks` to a temp
-        directory on disk — fully materialized before any table file is
-        deleted, so the publish step never recomputes from files it is
-        replacing (unlike a cache, whose evicted blocks would); (2) publish
-        via the pluggable committer (dynamic partition overwrite by default,
-        Delta/Iceberg MERGE in production). `touched` lists the pgroups this
-        write read and merged: a touched pgroup with NO surviving rows never
-        appears in `blocks`, so the committer can't replace it — we delete
-        those partition directories explicitly (the stale-erase fix: a
-        to_black erase that empties a super-block must actually remove it)."""
-        stage_dir = f"{self.path}.stage-{uuid.uuid4().hex[:12]}"
-        try:
-            (
-                blocks.sortWithinPartitions("t", "morton")
-                .write.mode("overwrite")
-                .partitionBy("lookup_key", "resolution", "pgroup")
-                .parquet(stage_dir)
-            )
-            # pgroups that survived the merge, from the stage listing (no
-            # extra Spark job)
-            stage_parts = _list_partition_dirs(stage_dir)
-            present = {
-                pg
-                for (lk, res, pg) in stage_parts
-                if lk == self.lookup_key and res == resolution
-            }
-            if stage_parts:  # nothing staged (e.g. erase-all) -> only deletes
-                self.committer.publish(self, stage_dir)
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-        if touched:
-            table_dirs = _list_partition_dirs(self.path)
-            for pg in touched:
-                if int(pg) in present:
-                    continue
-                stale = table_dirs.get((self.lookup_key, resolution, int(pg)))
-                if stale is not None:
-                    shutil.rmtree(stale, ignore_errors=True)
+        """Super-block rewrite of `blocks` through `stage_and_publish`,
+        each staged file a (t, morton) run. `touched` lists the pgroups
+        this write read and merged: one that staged no rows (an erase that
+        emptied it) is dropped. Callers hold `writing(self.path)`."""
+        keys = [(self.lookup_key, resolution, int(pg)) for pg in touched]
+        stage_and_publish(self.path, blocks.sortWithinPartitions("t", "morton"), keys)
 
     def get_cubes(
         self, mortons: Sequence[int], t: int = 0, resolution: int = 0
@@ -361,12 +411,13 @@ class CuboidStore:
         writes fragment partitions (one file per write); compaction restores
         the scan-friendly layout (the OPTIMIZE/ZORDER maintenance job of a
         real table format)."""
-        blocks = self.blocks(resolution)
-        n = blocks.count()
-        if n == 0:
-            return
-        num_files = max(1, -(-n // blocks_per_file))
-        self._commit(blocks.repartitionByRange(num_files, "pgroup", "morton", "t"), resolution)
+        with writing(self.path):
+            blocks = self.blocks(resolution)
+            n = blocks.count()
+            if n == 0:
+                return
+            num_files = max(1, -(-n // blocks_per_file))
+            self._commit(blocks.repartitionByRange(num_files, "pgroup", "morton", "t"), resolution)
 
     # -- resolution hierarchy ------------------------------------------------
 
@@ -385,34 +436,35 @@ class CuboidStore:
         is one job writing its own (lookup_key, resolution) partition."""
         from spdb_spark.operators import voxel as V
 
-        for level in range(1, num_levels):
-            vox = self.voxels(resolution=level - 1)
-            if channel_type == "annotation":
-                down = V.downsample_annotation(vox, isotropic=isotropic)
-            elif method == "stride":
-                down = V.downsample_image_stride(vox, factor=1)
-            else:
-                down = V.downsample_image_avg(vox, factor=1).withColumn(
-                    "value", F.col("value").cast("long")
+        with writing(self.path):
+            for level in range(1, num_levels):
+                vox = self.voxels(resolution=level - 1)
+                if channel_type == "annotation":
+                    down = V.downsample_annotation(vox, isotropic=isotropic)
+                elif method == "stride":
+                    down = V.downsample_image_stride(vox, factor=1)
+                else:
+                    down = V.downsample_image_avg(vox, factor=1).withColumn(
+                        "value", F.col("value").cast("long")
+                    )
+                down = down.where(F.col("value") != 0).select(
+                    F.lit(self.lookup_key).alias("lookup_key"),
+                    F.lit(level).alias("resolution"),
+                    "t",
+                    "x",
+                    "y",
+                    "z",
+                    "value",
                 )
-            down = down.where(F.col("value") != 0).select(
-                F.lit(self.lookup_key).alias("lookup_key"),
-                F.lit(level).alias("resolution"),
-                "t",
-                "x",
-                "y",
-                "z",
-                "value",
-            )
-            blocks = _with_pgroup(self._voxels_to_blocks(down, level))
-            # re-runs must drop super-blocks that no longer exist at this
-            # level (same stale-partition class as an erasing write)
-            prior = {
-                pg
-                for (lk, res, pg) in _list_partition_dirs(self.path)
-                if lk == self.lookup_key and res == level
-            }
-            self._commit(blocks, level, touched=sorted(prior))
+                blocks = _with_pgroup(self._voxels_to_blocks(down, level))
+                # re-runs must drop super-blocks that no longer exist at this
+                # level (same stale-partition class as an erasing write)
+                prior = {
+                    pg
+                    for (lk, res, pg) in _list_partition_dirs(self.path)
+                    if lk == self.lookup_key and res == level
+                }
+                self._commit(blocks, level, touched=sorted(prior))
 
     # -- read path ----------------------------------------------------------
 

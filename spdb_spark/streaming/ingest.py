@@ -7,8 +7,10 @@ each batch applies the same non-zero-overwrite merge as write_cuboid with
 latest-write-wins ordering INSIDE the batch (the reference serializes
 concurrent writes via its page-out set + delayed-write queue — here a
 row_number over a monotonic sequence column does it declaratively), then
-commits atomically. Readers always see a consistent snapshot (the
-dirty-key read barrier, rediskvio.py:260-286, is obviated).
+publishes through CuboidStore's crash-safe partition swap. Readers that
+need a consistent snapshot during ingest use TransactionalVoxelIngest,
+whose manifest commit obviates the dirty-key read barrier
+(rediskvio.py:260-286).
 """
 
 from __future__ import annotations
@@ -92,19 +94,17 @@ class StreamingVoxelIngest:
     partitions, and the merged result is staged to disk and then swapped
     in per-partition — untouched partitions are never read or rewritten,
     so per-batch cost is O(batch + touched partitions), not O(table).
-    The stage step fully materializes before any table file is deleted,
-    and the swap moves the old partition ASIDE (rename into a trash dir
-    outside the table root) before renaming the staged one in, so no step
-    ever deletes the only copy: a crash mid-publish leaves the old data
-    in the trash dir, and the recovery pass at the next batch start (or
-    `recover()`) restores it before merging — the redelivered batch then
-    produces the correct merge. Single writer, and readers should not
-    list the table DURING a publish (a partition is briefly absent
-    mid-swap); for concurrent readers / multi-writer use
-    TransactionalVoxelIngest, whose manifest commit never unpublishes a
-    file. With Delta/Iceberg this whole method is `MERGE INTO`; the
-    streaming topology (readStream -> transform -> writeStream/
-    foreachBatch) is identical either way.
+    Staging and the swap are CuboidStore's: the batch holds the table's
+    writer lock (`store.writing`, which first runs `store.recover`), and
+    `store.stage_and_publish` moves each old partition aside before
+    renaming the staged one in, so a crash mid-publish leaves the old data
+    in a trash dir that the next batch restores before merging — the
+    redelivered batch then produces the correct merge. Readers should
+    not list the table DURING a publish (a partition is briefly absent
+    mid-swap); for isolated readers use TransactionalVoxelIngest, whose
+    manifest commit never unpublishes a file. With Delta/Iceberg this
+    whole method is `MERGE INTO`; the streaming topology (readStream ->
+    transform -> writeStream/foreachBatch) is identical either way.
     """
 
     PART_COLS = ("lookup_key", "resolution", "pgroup")
@@ -153,107 +153,25 @@ class StreamingVoxelIngest:
         )
         return df.where(cond).select(*VOXEL_SCHEMA.fieldNames())
 
-    def recover(self) -> None:
-        """Restore partitions from any interrupted publish. A trash entry
-        whose table leaf is missing means the crash hit between the
-        move-aside and the swap — the trash copy is the only one; put it
-        back. A trash entry whose leaf exists means the swap completed —
-        the trash copy is the superseded version; drop it."""
-        import glob
-        import os
-        import shutil
-
-        from spdb_spark.store import _list_partition_dirs
-
-        for trash_root in glob.glob(f"{self.table_path}.trash-*"):
-            table_dirs = _list_partition_dirs(self.table_path)
-            for key, src in _list_partition_dirs(trash_root).items():
-                if key not in table_dirs:
-                    dest = os.path.join(
-                        self.table_path, os.path.relpath(src, trash_root)
-                    )
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    os.rename(src, dest)
-            shutil.rmtree(trash_root, ignore_errors=True)
-
-    def _prune_empty_parents(self, leaf_dir: str) -> None:
-        """Remove now-empty lookup_key=/resolution= parents after a leaf
-        drop, so an emptied table doesn't accumulate husk directories
-        (and rmdir never touches a non-empty dir, so this is safe)."""
-        import os
-
-        p = os.path.dirname(leaf_dir)
-        root = os.path.abspath(self.table_path)
-        while os.path.abspath(p) != root:
-            try:
-                os.rmdir(p)
-            except OSError:
-                break
-            p = os.path.dirname(p)
-
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-        import uuid
+        from spdb_spark.store import stage_and_publish, writing
 
-        from spdb_spark.store import _list_partition_dirs
-
-        self.recover()
-        touched = [
-            (r.lookup_key, int(r.resolution), int(r.pgroup))
-            for r in batch.withColumn("pgroup", _pgroup_col())
-            .select(*self.PART_COLS)
-            .distinct()
-            .collect()
-        ]
-        if not touched:
-            self._version += 1
-            return
-        merged = merge_batch(self._read_partitions(touched), batch)
-        merged = merged.withColumn("pgroup", _pgroup_col())
-
-        token = uuid.uuid4().hex[:12]
-        stage_dir = f"{self.table_path}.stage-{token}"
-        trash_dir = f"{self.table_path}.trash-{token}"
-        try:
-            (
-                merged.sortWithinPartitions("t", "z", "y", "x")
-                .write.mode("overwrite")
-                .partitionBy(*self.PART_COLS)
-                .parquet(stage_dir)
-            )
-            staged = _list_partition_dirs(stage_dir)
-            table_dirs = _list_partition_dirs(self.table_path)
-
-            def _move_aside(dest: str) -> None:
-                # rename (never delete) the current copy: until the batch
-                # fully publishes, every partition version stays on disk
-                aside = os.path.join(
-                    trash_dir, os.path.relpath(dest, self.table_path)
+        with writing(self.table_path):
+            touched = [
+                (r.lookup_key, int(r.resolution), int(r.pgroup))
+                for r in batch.withColumn("pgroup", _pgroup_col())
+                .select(*self.PART_COLS)
+                .distinct()
+                .collect()
+            ]
+            if touched:
+                merged = merge_batch(self._read_partitions(touched), batch)
+                stage_and_publish(
+                    self.table_path,
+                    merged.withColumn("pgroup", _pgroup_col())
+                    .sortWithinPartitions("t", "z", "y", "x"),
+                    touched,
                 )
-                os.makedirs(os.path.dirname(aside), exist_ok=True)
-                os.rename(dest, aside)
-
-            for key in touched:
-                src = staged.get(key)
-                dest = table_dirs.get(key)
-                if src is None:
-                    # merge left no rows in a touched partition: drop it
-                    if dest is not None:
-                        _move_aside(dest)
-                        self._prune_empty_parents(dest)
-                    continue
-                if dest is None:
-                    dest = os.path.join(
-                        self.table_path, os.path.relpath(src, stage_dir)
-                    )
-                elif os.path.isdir(dest):
-                    _move_aside(dest)
-                os.makedirs(os.path.dirname(dest), exist_ok=True)
-                os.rename(src, dest)
-            shutil.rmtree(trash_dir, ignore_errors=True)
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
         self._version += 1
 
     def start(self, stream: DataFrame, checkpoint: str, **trigger_kwargs):
