@@ -39,6 +39,16 @@ def pack_array(arr: np.ndarray) -> bytes:
     return header + zlib.compress(np.ascontiguousarray(arr).tobytes(), level=1)
 
 
+def cuboid_ids(arr: np.ndarray) -> list[int] | None:
+    """The `ids` column of one cuboid: its sorted distinct non-zero values
+    in the int64 view for a 64-bit (annotation id) cuboid, None for
+    narrower dtypes, whose dense image voxels would make the unique cost
+    as much as the pack."""
+    if arr.dtype.itemsize != 8:
+        return None
+    return np.unique(arr[arr != 0].view(np.int64)).tolist()
+
+
 def unpack_array(blob: bytes) -> np.ndarray:
     """Decompress a blob back into a [z, y, x] ndarray."""
     magic, code, z, y, x = _HEADER.unpack_from(blob)
@@ -129,6 +139,7 @@ def make_voxels_to_blocks(dtype: str):
                 "y_idx": [np.int32(y_idx)],
                 "z_idx": [np.int32(z_idx)],
                 "blob": [pack_array(arr)],
+                "ids": [cuboid_ids(arr)],
             }
         )
 

@@ -8,6 +8,7 @@ pruning (reference key formats: kvio.py:52-109, object.py:338-363).
 """
 
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     IntegerType,
     LongType,
@@ -16,7 +17,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# Block table: storage/ingest unit == spdb's S3 cuboid object.
+# Block table: storage/ingest unit == spdb's S3 cuboid object. `ids` is the
+# cuboid's sorted distinct non-zero ids in the int64 view (the reference's
+# per-cuboid id set, object_indices.py:625-665), filled for 64-bit
+# (annotation) cuboids and null otherwise; files written before the column
+# read it as null.
 CUBOID_SCHEMA = StructType(
     [
         StructField("lookup_key", StringType(), False),
@@ -27,6 +32,7 @@ CUBOID_SCHEMA = StructType(
         StructField("y_idx", IntegerType(), False),
         StructField("z_idx", IntegerType(), False),
         StructField("blob", BinaryType(), False),
+        StructField("ids", ArrayType(LongType()), True),
     ]
 )
 

@@ -22,6 +22,15 @@ acknowledged write is durable; readers are not isolated from a swap in
 progress and can briefly miss a super-block being replaced. Dynamic
 resample of off-base-resolution annotation cutouts is IMPLEMENTED via the
 zoom operators (the reference raises NotImplemented, spatialdb.py:410-431).
+
+Interactive requests run on cuboid blocks as numpy arrays on the driver:
+cutouts, tiles and writes, and both id queries. `get_ids_in_region`
+decodes the box's blobs (`CuboidStore.ids_in_region`); `get_bounding_box`
+decodes only the cuboids whose per-cuboid `ids` hold the id
+(`CuboidStore.id_bounds`). The off-base rule (`_resamples`): an annotation
+read off base resolution whose pyramid is not `DOWNSAMPLED` resamples
+base, and `get_ids_in_region` then answers from that resampled cutout;
+`get_bounding_box` always reads the stored level.
 """
 
 from __future__ import annotations
@@ -93,6 +102,17 @@ class SpatialDB:
 
     # -- reads ---------------------------------------------------------------
 
+    @staticmethod
+    def _resamples(resource: Resource, resolution: int) -> bool:
+        """Whether a read at `resolution` resamples base instead of reading
+        the stored level: an annotation channel, off base resolution, whose
+        pyramid is not built or is stale (`DOWNSAMPLED` not set)."""
+        return not (
+            resolution == resource.channel.base_resolution
+            or resource.channel.is_image()
+            or resource.channel.downsample_status == "DOWNSAMPLED"
+        )
+
     def cutout(
         self,
         resource: Resource,
@@ -109,15 +129,11 @@ class SpatialDB:
         published table (not isolated from a write's swap in progress)."""
         del access_mode
         store = self._store(resource, iso)
-        base = resource.channel.base_resolution
-        if (
-            resolution == base
-            or resource.channel.is_image()
-            or resource.channel.downsample_status == "DOWNSAMPLED"
-        ):
+        if not self._resamples(resource, resolution):
             return store.cutout(corner, extent, resolution, time_sample_range, filter_ids)
         # dynamic resample for annotation channels off base resolution
         # (reference raises NotImplemented here; we compose zoom operators)
+        base = resource.channel.base_resolution
         factor = resolution - base
         if factor > 0:
             big_corner = [c << factor for c in corner[:2]] + [corner[2]]
@@ -181,33 +197,38 @@ class SpatialDB:
         extent: Sequence[int],
         time_sample_range: Sequence[int] | None = None,
     ) -> dict:
-        from spdb_spark.operators import voxel as V
-
-        ids = (
-            V.ids_in_region(
-                self._store(resource).voxels(resolution), corner, extent, time_sample_range
+        """Sorted distinct non-zero ids in a box, as strings (reference:
+        object.py:807-831); ids >= 2^63 come back wrapped ("-1" for
+        2^64-1). `time_sample_range` None means every t. Where `cutout`
+        resamples (`_resamples`), the ids are those of that resampled
+        cutout, and None there covers the experiment's time samples."""
+        if self._resamples(resource, resolution):
+            t_range = time_sample_range or (0, resource.experiment.num_time_samples)
+            arr = self.cutout(resource, corner, extent, resolution, t_range)
+            ids = np.unique(arr[arr != 0].astype(np.int64))
+        else:
+            ids = self._store(resource).ids_in_region(
+                corner, extent, resolution, time_sample_range
             )
-            .orderBy("id")
-            .collect()
-        )
-        # reference returns string ids (object.py:807-831)
-        return {"ids": [str(r.id) for r in ids]}
+        return {"ids": [str(i) for i in ids.tolist()]}
 
     def get_bounding_box(
         self, resource: Resource, resolution: int, obj_id: int, bb_type: str = "loose"
     ) -> dict | None:
-        from spdb_spark.operators import voxel as V
-
-        vox = self._store(resource).voxels(resolution)
-        fn = V.loose_bounding_box if bb_type == "loose" else V.tight_bounding_box
-        row = fn(vox, obj_id).collect()[0]
-        if row.x_min is None:
+        """Bounding box of an id over every t, or None if it is absent:
+        "tight" is exact, "loose" rounds out to cuboid edges (reference:
+        spatialdb.py:869-891). It always reads the stored level, so off
+        base it sees the pyramid as last built, even where `cutout`
+        resamples base."""
+        box = self._store(resource).id_bounds(obj_id, resolution, loose=bb_type == "loose")
+        if box is None:
             return None
+        (x0, x1), (y0, y1), (z0, z1) = box
         # reference dict shape: {"x_range": [min, max+1], ...}
         return {
-            "x_range": [row.x_min, row.x_max + 1],
-            "y_range": [row.y_min, row.y_max + 1],
-            "z_range": [row.z_min, row.z_max + 1],
+            "x_range": [x0, x1 + 1],
+            "y_range": [y0, y1 + 1],
+            "z_range": [z0, z1 + 1],
             "t_range": [0, 1],
         }
 

@@ -2,8 +2,9 @@
 on Spark + Parquet).
 
 Layout: one parquet table partitioned by (lookup_key, resolution, pgroup),
-one row per cuboid per time sample — (t, morton, x_idx, y_idx, z_idx, blob)
-with the blob a compressed [z,y,x] ndarray (codec.py). This is the Spark
+one row per cuboid per time sample — (t, morton, x_idx, y_idx, z_idx, blob,
+ids) with the blob a compressed [z,y,x] ndarray (codec.py) and ids its
+distinct non-zero ids (64-bit channels; null otherwise). This is the Spark
 analog of spdb's S3 object store keyed md5&lookup&res&t&morton
 (object.py:338-363); Morton + the idx columns give space-filling locality
 and min/max row-group pruning, and `pgroup = morton >> 12` (a 16x16x16
@@ -30,6 +31,9 @@ assembly (Cube.add_data, cube.py:87-106): blobs come back over Arrow and a
 driver thread pool decodes, crops and pastes each into the output array.
 The voxel DataFrame (`cutout_voxels`, `voxels`) is the distributed path.
 Absent cuboids are implicit zeros (zero-suppression, spatialdb.py:571-585).
+Id queries run on the same blocks: `ids_in_region` decodes and crops the
+box's blobs, and `id_bounds` fetches only the rows whose `ids` hold the id
+(the reference's per-cuboid id sets, object_indices.py:625-665, 730-769).
 """
 
 from __future__ import annotations
@@ -52,6 +56,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from spdb_spark.codec import (
     blocks_to_voxels,
+    cuboid_ids,
     make_voxels_to_blocks,
     pack_array,
     unpack_array,
@@ -329,7 +334,8 @@ class CuboidStore:
             _merge(cube[in_cuboid], data[t - t0][in_box], mode)
             row = None
             if cube.any():
-                row = (self.lookup_key, resolution, t, morton, *idx, pack_array(cube))
+                row = (self.lookup_key, resolution, t, morton, *idx,
+                       pack_array(cube), cuboid_ids(cube))
             return (t, morton), row
 
         touched = sorted({m >> PGROUP_SHIFT for m in cuboids})
@@ -352,7 +358,7 @@ class CuboidStore:
             # small rewrites no longer leave one more file per write, and
             # large ones still stage in parallel
             parts = _list_partition_dirs(self.path)
-            nbytes = sum(len(r[-1]) for r in rows) + sum(
+            nbytes = sum(len(blob) for *_, blob, _ids in rows) + sum(
                 _dir_bytes(parts.get((self.lookup_key, resolution, pg))) for pg in touched
             )
             tasks = max(len(touched), 1 + nbytes // _FILE_OPEN_COST)
@@ -562,3 +568,69 @@ class CuboidStore:
             paste,
         )
         return out
+
+    def ids_in_region(
+        self,
+        corner: Sequence[int],
+        extent: Sequence[int],
+        resolution: int = 0,
+        time_sample_range: Sequence[int] | None = None,
+    ) -> np.ndarray:
+        """Sorted distinct non-zero ids in a box as int64, ids >= 2^63 in
+        their wrapped form (the voxel DataFrame's view; reference:
+        get_ids_in_region, object.py:778-831). Each pruned blob is decoded
+        and cropped, and its unique non-zero values are taken on the decode
+        pool. `time_sample_range` None means every t."""
+
+        def unique(r, arr: np.ndarray) -> np.ndarray:
+            piece = arr[_overlap(corner, extent, (r.x_idx, r.y_idx, r.z_idx))[0]]
+            return np.unique(piece[piece != 0]).astype(np.int64)
+
+        parts = self._each_block(
+            self._box_blocks(corner, extent, resolution, time_sample_range),
+            ["x_idx", "y_idx", "z_idx"],
+            unique,
+        )
+        return np.unique(np.concatenate([np.empty(0, np.int64), *parts]))
+
+    def id_bounds(
+        self, obj_id: int, resolution: int = 0, loose: bool = False
+    ) -> list[tuple[int, int]] | None:
+        """[(x_min, x_max), (y_min, y_max), (z_min, z_max)] of the voxels
+        equal to `obj_id` over every t, or None if there are none. The id
+        matches in the int64 view, like `cutout`'s `filter_ids`. Only rows
+        whose `ids` hold it are fetched and decoded, plus rows with no id
+        set (null `ids`). `loose` rounds out to cuboid edges (reference:
+        get_tight/loose_bounding_box, object_indices.py:373-623)."""
+        obj_id = int(obj_id)
+        if obj_id == 0 or not -(2**63) <= obj_id < 2**63:
+            return None
+        # the id as a stored voxel; one that does not map back (300 in a
+        # uint8 channel) matches nothing
+        value = np.array(obj_id, dtype=np.int64).astype(self.datatype)
+        if int(value.astype(np.int64)) != obj_id:
+            return None
+        sizes = (CUBOID_X, CUBOID_Y, CUBOID_Z)
+
+        def bounds(r, arr: np.ndarray) -> list[tuple[int, int]] | None:
+            hit = arr == value
+            out = []
+            # x, y, z in turn: reduce the [z,y,x] array over the other two axes
+            for axis, i, n in zip((2, 1, 0), (r.x_idx, r.y_idx, r.z_idx), sizes):
+                on = np.flatnonzero(hit.any(axis=tuple(a for a in range(3) if a != axis)))
+                if not len(on):
+                    return None
+                lo = int(i) * n
+                out.append((lo + int(on[0]), lo + int(on[-1])))
+            return out
+
+        rows = self.blocks(resolution).where(
+            F.col("ids").isNull() | F.array_contains("ids", F.lit(obj_id).cast("long"))
+        )
+        found = [b for b in self._each_block(rows, ["x_idx", "y_idx", "z_idx"], bounds) if b]
+        if not found:
+            return None
+        box = [(min(b[a][0] for b in found), max(b[a][1] for b in found)) for a in range(3)]
+        if loose:
+            box = [(lo // n * n, (hi // n + 1) * n - 1) for (lo, hi), n in zip(box, sizes)]
+        return box

@@ -109,6 +109,8 @@ def test_write_after_downsample_resets_status(sdb):
     assert r.channel.downsample_status == "NOT_DOWNSAMPLED"
     assert sdb.load_resource(r.lookup_key).channel.downsample_status == "NOT_DOWNSAMPLED"
     assert sdb.cutout(r, (0, 0, 0), (4, 4, 16), resolution=1)[0, 0, 0, 0] == 9
+    # the id query answers from the same resampled read, not the stale level
+    assert sdb.get_ids_in_region(r, 1, (0, 0, 0), (4, 4, 16)) == {"ids": ["9"]}
 
 
 def test_zoom_in_annotation_cutout_at_odd_corners(sdb):
