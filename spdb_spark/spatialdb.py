@@ -18,16 +18,19 @@ Differences (deliberate, documented): no cache/dirty-read machinery
 (access_mode is a no-op: every read goes to the published table). Writers
 of a channel are serialized by a file lock and publish through a
 crash-safe partition swap (store.OverwritePublisher.publish), so every
-acknowledged write is durable; readers are not isolated from a swap in
-progress and can briefly miss a super-block being replaced. Dynamic
+acknowledged write is durable. A read whose listed files a publish removed
+lists again once, but readers are not isolated from a swap in progress:
+one that lists mid-swap can miss a super-block being replaced. Dynamic
 resample of off-base-resolution annotation cutouts is IMPLEMENTED via the
 zoom operators (the reference raises NotImplemented, spatialdb.py:410-431).
 
-Interactive requests run on cuboid blocks as numpy arrays on the driver:
-cutouts, tiles and writes, and both id queries. `get_ids_in_region`
-decodes the box's blobs (`CuboidStore.ids_in_region`); `get_bounding_box`
-decodes only the cuboids whose per-cuboid `ids` hold the id
-(`CuboidStore.id_bounds`). The off-base rule (`_resamples`): an annotation
+Interactive requests start no Spark job: cutouts, tiles, writes and both
+id queries read the pruned parquet files with pyarrow on the driver, work
+on cuboid blocks as numpy arrays there, and writes stage through pyarrow
+too. `get_ids_in_region` decodes the box's blobs
+(`CuboidStore.ids_in_region`); `get_bounding_box` decodes only the
+cuboids whose per-cuboid `ids` hold the id (`CuboidStore.id_bounds`).
+`downsample` and the distributed paths stay Spark jobs. The off-base rule (`_resamples`): an annotation
 read off base resolution whose pyramid is not `DOWNSAMPLED` resamples
 base, and `get_ids_in_region` then answers from that resampled cutout;
 `get_bounding_box` always reads the stored level.

@@ -14,32 +14,35 @@ not the channel size (the plain-parquet stand-in for Delta MERGE file
 granularity).
 
 Write path parity (spatialdb.py:719-867): a dense merge per cuboid on the
-driver, like the reads. The stored blobs the box overlaps are fetched and
-decoded, the box slice is overlaid with non-zero-overwrite
-(overwriteDense.c), fill-only (exceptionDense.c) or to_black erase
-(cube.py:264-291) semantics, and the results are packed and committed with
-the untouched rows of their super-blocks in one partition rewrite
-(Delta/Iceberg MERGE INTO in production). Writers of a table are
+driver, like the reads, with no Spark job. The stored blobs the box overlaps
+are decoded, overlaid with non-zero-overwrite (overwriteDense.c), fill-only
+(exceptionDense.c) or to_black erase (cube.py:264-291) semantics and packed;
+the other rows of the touched super-blocks pass through undecoded, and
+pyarrow stages each touched partition as one file (Delta/Iceberg MERGE INTO
+in production; bulk writers stage through Spark). Writers of a table are
 serialized by a file lock, and the rewrite is staged beside the table and
 swapped in per partition without ever deleting the only copy
 (`OverwritePublisher.publish`, `recover`): the reference's locked page-out
 (state.py:332-380) in plain files.
 
 Read path parity (spatialdb.py:360-717): box -> covering cuboid range filter
-(partition+stats pruning). Dense `cutout` is block-level with driver
-assembly (Cube.add_data, cube.py:87-106): blobs come back over Arrow and a
-driver thread pool decodes, crops and pastes each into the output array.
-The voxel DataFrame (`cutout_voxels`, `voxels`) is the distributed path.
-Absent cuboids are implicit zeros (zero-suppression, spatialdb.py:571-585).
-Id queries run on the same blocks: `ids_in_region` decodes and crops the
-box's blobs, and `id_bounds` fetches only the rows whose `ids` hold the id
-(the reference's per-cuboid id sets, object_indices.py:625-665, 730-769).
+(partition+stats pruning). Interactive reads run no Spark job: `_fetch`
+scans the pruned files with pyarrow.dataset on the driver, and a driver
+thread pool decodes, crops and pastes each blob (Cube.add_data,
+cube.py:87-106). `blocks`, `voxels` and `cutout_voxels` are the distributed
+path over the same files. Absent cuboids are implicit zeros
+(zero-suppression, spatialdb.py:571-585). Id queries run on the same
+blocks: `ids_in_region` decodes and crops the box's blobs; `id_bounds`
+reads `ids` first and decodes only the rows that hold the id (the
+reference's per-cuboid id sets, object_indices.py:625-665, 730-769).
 """
 
 from __future__ import annotations
 
 import fcntl
+import functools
 import glob
+import operator
 import os
 import shutil
 import uuid
@@ -50,8 +53,13 @@ from itertools import product
 from urllib.parse import unquote
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from spdb_spark.codec import (
@@ -75,14 +83,20 @@ _DECODE_THREADS = (
     len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count() or 1
 )
 
-# Spark's default spark.sql.files.openCostInBytes: below this many bytes a
-# write does not stage in another task (and file).
+# Spark's default spark.sql.files.openCostInBytes: a staged row group closes
+# before it passes this many blob bytes, so a dense image cuboid is its own
+# row group and small annotation cuboids share one.
 _FILE_OPEN_COST = 4 << 20
 
 # NOTE: StructType.add mutates in place — build the read schema by copy.
 _READ_SCHEMA = StructType(
     list(CUBOID_SCHEMA.fields) + [StructField("pgroup", IntegerType(), True)]
 )
+# The columns of a partition file: the partition values live in its path.
+_FILE_SCHEMA = to_arrow_schema(StructType(CUBOID_SCHEMA.fields[2:]))
+
+# What Spark escapes as %XX in partition paths (escapePathName; not `&`)
+_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset('"#%\'*/:=?[\\]^{\x7f')
 
 
 def _cuboid_ranges(corner: Sequence[int], extent: Sequence[int]) -> list[range]:
@@ -132,9 +146,27 @@ def _with_pgroup(df: DataFrame) -> DataFrame:
     )
 
 
-def _dir_bytes(path: str | None) -> int:
-    """Bytes of the files directly under `path` (0 for None)."""
-    return sum(e.stat().st_size for e in os.scandir(path)) if path else 0
+def _escape(value: str) -> str:
+    """A partition value as Spark names its directory (the inverse of the
+    `unquote` in `_list_partition_dirs`)."""
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in value)
+
+
+def _among(name: str, values) -> pc.Expression:
+    """Dataset filter `name in values`, with the range that pyarrow needs
+    to prune row groups by statistics (it does not for is_in)."""
+    lo, hi = min(values), max(values)
+    return (pc.field(name) >= lo) & (pc.field(name) <= hi) & pc.field(name).isin(list(values))
+
+
+def _box_filter(col: Callable, corner, extent, time_sample_range=None):
+    """Range predicate on x/y/z_idx (and t) of the cuboids covering a box,
+    over `col`: F.col for a Spark scan, pc.field for the driver fetch."""
+    ranges = list(zip(("x_idx", "y_idx", "z_idx"), _cuboid_ranges(corner, extent)))
+    if time_sample_range is not None:
+        ranges.append(("t", range(*time_sample_range)))
+    terms = [(col(c) >= r.start) & (col(c) < r.stop) for c, r in ranges]
+    return functools.reduce(operator.and_, terms)
 
 
 def _list_partition_dirs(root: str) -> dict[tuple[str, int, int], str]:
@@ -212,20 +244,50 @@ def recover(table_path: str) -> None:
 
 
 def stage_and_publish(
-    table_path: str, rows: DataFrame, touched: Sequence[tuple[str, int, int]] = ()
+    table_path: str, stage: Callable[[str], None], touched: Sequence[tuple[str, int, int]] = ()
 ) -> None:
-    """Rewrite the (lookup_key, resolution, pgroup) partitions of `rows`
-    in two steps: (1) stage them to a fresh directory beside the table,
-    fully materialized before any table file moves, so the publish never
-    recomputes from files it replaces; (2) swap them in with
-    `OverwritePublisher.publish`, which also drops the `touched`
+    """Rewrite (lookup_key, resolution, pgroup) partitions in two steps:
+    (1) `stage(stage_dir)` writes them, Hive-partitioned, to a fresh
+    directory beside the table, fully materialized before any table file
+    moves, so the publish never recomputes from files it replaces; (2)
+    `OverwritePublisher.publish` swaps them in and drops the `touched`
     partitions that staged no rows. Callers hold `writing(table_path)`."""
     stage_dir = f"{table_path}.stage-{uuid.uuid4().hex[:12]}"
     try:
-        rows.write.partitionBy("lookup_key", "resolution", "pgroup").parquet(stage_dir)
+        stage(stage_dir)
         OverwritePublisher.publish(table_path, stage_dir, touched)
     finally:
         shutil.rmtree(stage_dir, ignore_errors=True)
+
+
+def spark_stage(rows: DataFrame) -> Callable[[str], None]:
+    """Stage writer for `stage_and_publish`: Spark writes `rows` (with the
+    partition columns) one file per task and partition."""
+    return lambda stage_dir: rows.write.partitionBy(
+        "lookup_key", "resolution", "pgroup"
+    ).parquet(stage_dir)
+
+
+def _arrow_stage(stage_dir: str, rows: pa.Table, lookup_key: str, resolution: int) -> None:
+    """Stage writer for `stage_and_publish`: pyarrow writes each pgroup of
+    the sorted `rows` as one snappy file in the directory Spark would name,
+    closing a row group before it passes `_FILE_OPEN_COST` blob bytes."""
+    pgroups = pc.shift_right(rows["morton"], PGROUP_SHIFT).to_numpy()
+    sizes = pc.binary_length(rows["blob"]).to_numpy()
+    for pg in np.unique(pgroups):
+        part = f"{stage_dir}/lookup_key={_escape(lookup_key)}/resolution={resolution}/pgroup={pg}"
+        os.makedirs(part)
+        stats = ["t", "morton", "x_idx", "y_idx", "z_idx"]  # not the blobs
+        with pq.ParquetWriter(f"{part}/part-{uuid.uuid4()}.snappy.parquet", _FILE_SCHEMA,
+                              compression="snappy", write_statistics=stats) as out:
+            group, nbytes = [], 0
+            for i in np.flatnonzero(pgroups == pg):
+                if group and nbytes + sizes[i] > _FILE_OPEN_COST:
+                    out.write_table(rows.take(group))
+                    group, nbytes = [], 0
+                group.append(i)
+                nbytes += sizes[i]
+            out.write_table(rows.take(group))
 
 
 @contextmanager
@@ -270,8 +332,8 @@ class CuboidStore:
         pgroup). `pgroups` restricts the scan to those partitions (pruned
         at the file-listing level, never read)."""
         if not self._exists():
-            # no partitions (not defaultParallelism empty ones), so a write's
-            # coalesced stage groups only real rows
+            # no partitions (not defaultParallelism empty ones), so a bulk
+            # stage writes no empty tasks
             empty = self.spark.sparkContext.emptyRDD()
             return _with_pgroup(self.spark.createDataFrame(empty, CUBOID_SCHEMA))
         df = (
@@ -314,7 +376,7 @@ class CuboidStore:
         skips them), the box slice is overlaid with `_merge`, and the results
         are packed on the decode pool. A cuboid that merges to all zeros is
         not stored. The other rows of the touched super-blocks pass through
-        as blobs into the same commit."""
+        undecoded, and each touched partition is staged as one file."""
         if mode not in ("overwrite", "exception", "to_black"):
             raise ValueError(f"bad mode {mode!r}")
         data = np.asarray(data).astype(self.datatype, copy=False)
@@ -334,37 +396,30 @@ class CuboidStore:
             _merge(cube[in_cuboid], data[t - t0][in_box], mode)
             row = None
             if cube.any():
-                row = (self.lookup_key, resolution, t, morton, *idx,
-                       pack_array(cube), cuboid_ids(cube))
+                values = (t, morton, *idx, pack_array(cube), cuboid_ids(cube))
+                row = dict(zip(_FILE_SCHEMA.names, values))
             return (t, morton), row
 
         touched = sorted({m >> PGROUP_SHIFT for m in cuboids})
-        hit = F.col("t").between(t0, t1 - 1) & F.col("morton").isin(list(cuboids))
+        hit = _box_filter(pc.field, corner, extent, (t0, t1))  # the (t, cuboids) merged
         with writing(self.path):
-            existing = self.blocks(resolution, pgroups=touched)
+            stored = self._fetch(resolution, touched)
             merged = dict(self._each_block(
-                existing.where(hit), ["t", "morton"],
-                lambda r, arr: merge(int(r.t), int(r.morton), arr.copy()),
+                stored.filter(hit),
+                lambda r, arr: merge(r["t"], r["morton"], arr.copy()),
             ))
             if mode != "to_black":
                 shape = (CUBOID_Z, CUBOID_Y, CUBOID_X)
                 absent = [k for k in product(range(t0, t1), cuboids) if k not in merged]
                 merged.update(_on_pool(lambda k: merge(*k, np.zeros(shape, self.datatype)), absent))
+            new = pa.Table.from_pylist([r for r in merged.values() if r is not None], _FILE_SCHEMA)
             # (t, morton) order: each staged file holds a contiguous Morton run
-            rows = [merged[k] for k in sorted(merged) if merged[k] is not None]
-            new_blocks = _with_pgroup(self.spark.createDataFrame(rows, CUBOID_SCHEMA))
-            # Stage in one task per touched super-block, more where the
-            # bytes exceed a file's open cost each, at most one per core:
-            # small rewrites no longer leave one more file per write, and
-            # large ones still stage in parallel
-            parts = _list_partition_dirs(self.path)
-            nbytes = sum(len(blob) for *_, blob, _ids in rows) + sum(
-                _dir_bytes(parts.get((self.lookup_key, resolution, pg))) for pg in touched
+            rows = pa.concat_tables([stored.filter(~hit), new])
+            rows = rows.sort_by([("t", "ascending"), ("morton", "ascending")])
+            keys = [(self.lookup_key, resolution, pg) for pg in touched]
+            stage_and_publish(
+                self.path, lambda d: _arrow_stage(d, rows, self.lookup_key, resolution), keys
             )
-            tasks = max(len(touched), 1 + nbytes // _FILE_OPEN_COST)
-            stage = existing.where(~hit).unionByName(new_blocks)
-            stage = stage.coalesce(min(self.spark.sparkContext.defaultParallelism, tasks))
-            self._commit(stage, resolution, touched)
 
     def _voxels_to_blocks(self, voxels: DataFrame, resolution: int) -> DataFrame:
         kernel = make_voxels_to_blocks(self.datatype)
@@ -392,7 +447,7 @@ class CuboidStore:
         this write read and merged: one that staged no rows (an erase that
         emptied it) is dropped. Callers hold `writing(self.path)`."""
         keys = [(self.lookup_key, resolution, int(pg)) for pg in touched]
-        stage_and_publish(self.path, blocks.sortWithinPartitions("t", "morton"), keys)
+        stage_and_publish(self.path, spark_stage(blocks.sortWithinPartitions("t", "morton")), keys)
 
     def get_cubes(
         self, mortons: Sequence[int], t: int = 0, resolution: int = 0
@@ -401,11 +456,11 @@ class CuboidStore:
         (reference: SpatialDB.get_cubes/sort_cubes, spatialdb.py:120-185).
         Absent cuboids come back as zero cubes (zero-suppression)."""
         wanted = sorted(set(int(m) for m in mortons))
+        if not wanted:
+            return {}
         pgroups = sorted({m >> PGROUP_SHIFT for m in wanted})
-        blocks = self.blocks(resolution, pgroups=pgroups).where(
-            (F.col("t") == t) & (F.col("morton").isin(wanted))
-        )
-        out = dict(self._each_block(blocks, ["morton"], lambda r, arr: (int(r.morton), arr)))
+        found = self._fetch(resolution, pgroups, (pc.field("t") == t) & _among("morton", wanted))
+        out = dict(self._each_block(found, lambda r, arr: (r["morton"], arr)))
         shape = (CUBOID_Z, CUBOID_Y, CUBOID_X)
         return {m: out[m] if m in out else np.zeros(shape, self.datatype) for m in wanted}
 
@@ -488,28 +543,45 @@ class CuboidStore:
 
     def _box_blocks(
         self, corner: Sequence[int], extent: Sequence[int], resolution: int,
-        time_sample_range: Sequence[int] | None,
-    ) -> DataFrame:
-        """Block rows covering a box: pgroup partition pruning plus the
-        x/y/z_idx and t range predicates (row-group stats pruning)."""
-        blocks = self.blocks(resolution, pgroups=self._box_pgroups(corner, extent))
-        for col, r in zip(("x_idx", "y_idx", "z_idx"), _cuboid_ranges(corner, extent)):
-            blocks = blocks.where(F.col(col).between(r.start, r.stop - 1))
-        if time_sample_range is not None:
-            t0, t1 = time_sample_range
-            blocks = blocks.where(F.col("t").between(t0, t1 - 1))
-        return blocks
+        time_sample_range: Sequence[int] | None, columns: Sequence[str],
+    ) -> pa.Table:
+        """`columns` of the block rows covering a box: pgroup partition
+        pruning plus `_box_filter` (row-group stats pruning)."""
+        where = _box_filter(pc.field, corner, extent, time_sample_range)
+        return self._fetch(resolution, self._box_pgroups(corner, extent), where, columns)
+
+    def _files(self, resolution: int, pgroups: Sequence[int] | None) -> list[str]:
+        """The parquet files of one resolution in `pgroups` (None: all)."""
+        return [
+            f
+            for (lk, res, pg), part in _list_partition_dirs(self.path).items()
+            if (lk, res) == (self.lookup_key, resolution) and (pgroups is None or pg in pgroups)
+            for f in glob.glob(os.path.join(glob.escape(part), "*.parquet"))
+        ]
+
+    def _fetch(
+        self, resolution: int, pgroups: Sequence[int] | None = None,
+        where: pc.Expression | None = None, columns: Sequence[str] | None = None,
+    ) -> pa.Table:
+        """THE interactive fetch: `columns` of one resolution's block rows
+        matching `where`, scanned on the driver by pyarrow.dataset; `pgroups`
+        prune the listing, `where` row groups by statistics. A publish can
+        remove listed files before the read (after renaming the new ones
+        in): the fetch then lists again, once."""
+        for attempt in (0, 1):
+            try:
+                dataset = ds.dataset(self._files(resolution, pgroups), schema=_FILE_SCHEMA)
+                return dataset.to_table(columns=columns, filter=where)
+            except FileNotFoundError:
+                if attempt:
+                    raise
 
     @staticmethod
-    def _each_block(
-        blocks: DataFrame, cols: Sequence[str], fn: Callable[[tuple, np.ndarray], object]
-    ) -> list:
-        """Fetch `cols` and the blob of each block row over Arrow and return
-        fn(row, decoded [z,y,x] array) per row, run on the driver decode
-        pool. Arrays live only inside `fn`, so a `fn` that consumes them
-        keeps extra memory at about one cuboid per thread."""
-        pdf = blocks.select(*cols, "blob").toPandas()
-        return _on_pool(lambda r: fn(r, unpack_array(r.blob)), pdf.itertuples(index=False))
+    def _each_block(rows: pa.Table, fn: Callable[[dict, np.ndarray], object]) -> list:
+        """fn(row dict, decoded [z,y,x] blob) per row of a `_fetch`ed table,
+        on the driver decode pool. Arrays live only inside `fn`, so a `fn`
+        that consumes them keeps extra memory at about a cuboid per thread."""
+        return _on_pool(lambda r: fn(r, unpack_array(r["blob"])), rows.to_pylist())
 
     def cutout_voxels(
         self,
@@ -523,7 +595,8 @@ class CuboidStore:
         rows -> exact box trim -> optional id filter. Returns the voxel
         DataFrame (no collect); dense reads use `cutout`."""
         (x0, y0, z0), (dx, dy, dz) = corner, extent
-        blocks = self._box_blocks(corner, extent, resolution, time_sample_range)
+        blocks = self.blocks(resolution, pgroups=self._box_pgroups(corner, extent))
+        blocks = blocks.where(_box_filter(F.col, corner, extent, time_sample_range))
         vox = blocks.mapInPandas(blocks_to_voxels, VOXEL_SCHEMA).where(
             (F.col("x") >= x0) & (F.col("x") < x0 + dx)
             & (F.col("y") >= y0) & (F.col("y") < y0 + dy)
@@ -553,20 +626,17 @@ class CuboidStore:
             [i for i in map(int, filter_ids) if -(2**63) <= i < 2**63], dtype=np.int64
         )
 
-        def paste(r, arr: np.ndarray) -> None:
-            in_cuboid, in_box = _overlap(corner, extent, (r.x_idx, r.y_idx, r.z_idx))
+        def paste(r: dict, arr: np.ndarray) -> None:
+            in_cuboid, in_box = _overlap(corner, extent, (r["x_idx"], r["y_idx"], r["z_idx"]))
             piece = arr[in_cuboid]
             # only non-zero voxels: all-zero pages of `out` stay untouched
             keep = piece != 0
             if ids is not None:
                 keep &= np.isin(piece.astype(np.int64), ids)
-            np.copyto(out[r.t - t0][in_box], piece, where=keep)
+            np.copyto(out[r["t"] - t0][in_box], piece, where=keep)
 
-        self._each_block(
-            self._box_blocks(corner, extent, resolution, (t0, t1)),
-            ["t", "x_idx", "y_idx", "z_idx"],
-            paste,
-        )
+        cols = ["t", "x_idx", "y_idx", "z_idx", "blob"]
+        self._each_block(self._box_blocks(corner, extent, resolution, (t0, t1), cols), paste)
         return out
 
     def ids_in_region(
@@ -582,14 +652,13 @@ class CuboidStore:
         and cropped, and its unique non-zero values are taken on the decode
         pool. `time_sample_range` None means every t."""
 
-        def unique(r, arr: np.ndarray) -> np.ndarray:
-            piece = arr[_overlap(corner, extent, (r.x_idx, r.y_idx, r.z_idx))[0]]
+        def unique(r: dict, arr: np.ndarray) -> np.ndarray:
+            piece = arr[_overlap(corner, extent, (r["x_idx"], r["y_idx"], r["z_idx"]))[0]]
             return np.unique(piece[piece != 0]).astype(np.int64)
 
+        cols = ["x_idx", "y_idx", "z_idx", "blob"]
         parts = self._each_block(
-            self._box_blocks(corner, extent, resolution, time_sample_range),
-            ["x_idx", "y_idx", "z_idx"],
-            unique,
+            self._box_blocks(corner, extent, resolution, time_sample_range, cols), unique
         )
         return np.unique(np.concatenate([np.empty(0, np.int64), *parts]))
 
@@ -598,10 +667,10 @@ class CuboidStore:
     ) -> list[tuple[int, int]] | None:
         """[(x_min, x_max), (y_min, y_max), (z_min, z_max)] of the voxels
         equal to `obj_id` over every t, or None if there are none. The id
-        matches in the int64 view, like `cutout`'s `filter_ids`. Only rows
-        whose `ids` hold it are fetched and decoded, plus rows with no id
-        set (null `ids`). `loose` rounds out to cuboid edges (reference:
-        get_tight/loose_bounding_box, object_indices.py:373-623)."""
+        matches in the int64 view, like `cutout`'s `filter_ids`. `ids` is
+        read first; only the blobs whose `ids` hold the id (or are null)
+        are fetched and decoded. `loose` rounds out to cuboid edges
+        (reference: get_tight/loose_bounding_box, object_indices.py:373-623)."""
         obj_id = int(obj_id)
         if obj_id == 0 or not -(2**63) <= obj_id < 2**63:
             return None
@@ -612,11 +681,11 @@ class CuboidStore:
             return None
         sizes = (CUBOID_X, CUBOID_Y, CUBOID_Z)
 
-        def bounds(r, arr: np.ndarray) -> list[tuple[int, int]] | None:
+        def bounds(r: dict, arr: np.ndarray) -> list[tuple[int, int]] | None:
             hit = arr == value
             out = []
             # x, y, z in turn: reduce the [z,y,x] array over the other two axes
-            for axis, i, n in zip((2, 1, 0), (r.x_idx, r.y_idx, r.z_idx), sizes):
+            for axis, i, n in zip((2, 1, 0), (r["x_idx"], r["y_idx"], r["z_idx"]), sizes):
                 on = np.flatnonzero(hit.any(axis=tuple(a for a in range(3) if a != axis)))
                 if not len(on):
                     return None
@@ -624,10 +693,17 @@ class CuboidStore:
                 out.append((lo + int(on[0]), lo + int(on[-1])))
             return out
 
-        rows = self.blocks(resolution).where(
-            F.col("ids").isNull() | F.array_contains("ids", F.lit(obj_id).cast("long"))
-        )
-        found = [b for b in self._each_block(rows, ["x_idx", "y_idx", "z_idx"], bounds) if b]
+        keys = self._fetch(resolution, columns=["t", "morton", "ids"]).to_pylist()
+        held = [(r["t"], r["morton"]) for r in keys if r["ids"] is None or obj_id in r["ids"]]
+        if not held:
+            return None
+        where = functools.reduce(operator.or_, [
+            (pc.field("t") == t) & _among("morton", [m for u, m in held if u == t])
+            for t in {t for t, _ in held}
+        ])
+        pgroups = {m >> PGROUP_SHIFT for _, m in held}
+        rows = self._fetch(resolution, pgroups, where, ["x_idx", "y_idx", "z_idx", "blob"])
+        found = [b for b in self._each_block(rows, bounds) if b]
         if not found:
             return None
         box = [(min(b[a][0] for b in found), max(b[a][1] for b in found)) for a in range(3)]

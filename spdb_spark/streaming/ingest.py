@@ -154,7 +154,7 @@ class StreamingVoxelIngest:
         return df.where(cond).select(*VOXEL_SCHEMA.fieldNames())
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from spdb_spark.store import stage_and_publish, writing
+        from spdb_spark.store import spark_stage, stage_and_publish, writing
 
         with writing(self.table_path):
             touched = [
@@ -168,8 +168,10 @@ class StreamingVoxelIngest:
                 merged = merge_batch(self._read_partitions(touched), batch)
                 stage_and_publish(
                     self.table_path,
-                    merged.withColumn("pgroup", _pgroup_col())
-                    .sortWithinPartitions("t", "z", "y", "x"),
+                    spark_stage(
+                        merged.withColumn("pgroup", _pgroup_col())
+                        .sortWithinPartitions("t", "z", "y", "x")
+                    ),
                     touched,
                 )
         self._version += 1

@@ -302,8 +302,8 @@ def test_ids_column_holds_each_blobs_ids(channels, monkeypatch):
 
 def _drop_ids_column(table_path: str, pgroup: int) -> None:
     """Rewrite one partition's parquet files as a table written before the
-    `ids` column existed (dropping Hadoop's checksum sidecars, which the
-    new bytes no longer match)."""
+    `ids` column existed (dropping any Hadoop checksum sidecars, which the
+    new bytes no longer match; files staged by pyarrow have none)."""
     import glob
 
     import pyarrow.parquet as pq
@@ -313,7 +313,9 @@ def _drop_ids_column(table_path: str, pgroup: int) -> None:
     for f in files:
         table = pq.read_table(f)
         pq.write_table(table.drop(["ids"]), f)
-        os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
         assert "ids" not in pq.read_schema(f).names
 
 
@@ -381,3 +383,157 @@ def test_emptied_and_all_zero_cuboids_store_no_rows(spark, tmp_path):
     with pytest.raises(ValueError):
         st.write_cuboid(a, (0, 0, 0), mode="replace")
     assert st.blocks().count() == 1
+
+
+def test_interactive_requests_run_no_spark_job(channels, spark):
+    """Cutouts, tiles, id queries and writes read and stage through pyarrow
+    on the driver: none of them starts a Spark job."""
+    st, vols = channels["uint64"]
+    sdb = SpatialDB(spark, os.path.dirname(st.path))
+    r = make_resource("nojob", "annotation", "uint64", lookup_key=st.lookup_key)
+    sdb._stores[st.lookup_key] = st
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    corner, extent = BOXES[0]
+    obj_id = int(vols[0][(vols[0] != 0) & (vols[0] < 2**63)][0])
+    requests = {
+        "cutout": lambda: sdb.cutout(r, corner, extent, 0, (0, 3), filter_ids=[obj_id]),
+        "xy_image": lambda: sdb.xy_image(r, corner[:2], extent[:2], 0, z_index=corner[2] + 3),
+        "get_ids_in_region": lambda: sdb.get_ids_in_region(r, 0, corner, extent),
+        "get_bounding_box": lambda: sdb.get_bounding_box(r, 0, obj_id, "tight")["x_range"],
+        # rewrites the fixture's own t=0 data: the channel does not change
+        "write_cuboid": lambda: sdb.write_cuboid(r, WRITE_CORNER, 0, vols[0]),
+    }
+    try:
+        for name, request in requests.items():
+            group = f"nojob-{name}"
+            sc.setJobGroup(group, name)
+            request()
+            assert list(tracker.getJobIdsForGroup(group)) == [], name
+        # the tracker does see a job run in a group
+        sc.setJobGroup("nojob-probe", "probe")
+        spark.range(1).count()
+        assert list(tracker.getJobIdsForGroup("nojob-probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    np.testing.assert_array_equal(
+        st.cutout(corner, extent, time_sample_range=(0, 3)),
+        _expected(vols, "uint64", corner, extent, (0, 3)),
+    )
+
+
+def test_fetch_relists_a_vanished_file_once(channels, monkeypatch):
+    """A publish between the fetch's listing and its read removes listed
+    files (after renaming the new ones in): the fetch lists again."""
+    st, vols = channels["uint16"]
+    stale = st._files(0, None)
+    st.write_cuboid(np.stack([vols[0]]), WRITE_CORNER, time_sample_start=0)  # same data
+    assert not any(map(os.path.exists, stale))
+    listings = []
+    real = CuboidStore._files
+
+    def listing(self, resolution, pgroups):
+        listings.append(stale if not listings else real(self, resolution, pgroups))
+        return listings[-1]
+
+    monkeypatch.setattr(CuboidStore, "_files", listing)
+    corner, extent = BOXES[0]
+    np.testing.assert_array_equal(
+        st.cutout(corner, extent, time_sample_range=(0, 3)),
+        _expected(vols, "uint16", corner, extent, (0, 3)),
+    )
+    assert len(listings) == 2
+
+
+def test_partition_names_escape_like_spark(spark, tmp_path):
+    """A lookup_key holding characters Spark escapes in partition paths is
+    staged under the directory Spark would name, and reads back through
+    Spark and through the driver fetch."""
+    key = "1&a=b%c:d#e?f g[h]é"
+    st = CuboidStore(spark, str(tmp_path / "odd"), datatype="uint8", lookup_key=key)
+    vol = np.random.default_rng(3).integers(1, 255, size=(2, 8, 8)).astype("uint8")
+    st.write_cuboid(vol, (CUBOID_X - 4, 0, 0))  # two pgroup-0 cuboids
+    by_spark = str(tmp_path / "by_spark")
+    st.blocks().write.partitionBy("lookup_key", "resolution", "pgroup").parquet(by_spark)
+    names = {os.path.relpath(d, root) for root in (st.path, by_spark)
+             for d in store_mod._list_partition_dirs(root).values()}
+    assert names == {"lookup_key=1&a%3Db%25c%3Ad%23e%3Ff g%5Bh%5Dé/resolution=0/pgroup=0"}
+    assert [lk for lk, _, _ in store_mod._list_partition_dirs(st.path)] == [key]
+    np.testing.assert_array_equal(st.cutout((CUBOID_X - 4, 0, 0), (8, 8, 2))[0], vol)
+    rows = st.blocks().select("lookup_key", "x_idx", "blob").collect()
+    assert {(r.lookup_key, r.x_idx) for r in rows} == {(key, 0), (key, 1)}
+    got = {r.x_idx: unpack_array(r.blob) for r in rows}
+    np.testing.assert_array_equal(got[0][:2, :8, CUBOID_X - 4 :], vol[:, :, :4])
+    np.testing.assert_array_equal(got[1][:2, :8, :4], vol[:, :, 4:])
+
+
+def test_mixed_writer_table_agrees_on_every_path(spark, tmp_path):
+    """One table with partitions staged by Spark (ingest, compact) and by
+    pyarrow (write_cuboid), plus a file without the `ids` column: the Spark
+    `blocks()`/`voxels()` and the driver `cutout`/`id_bounds` agree."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from spdb_spark.schema import VOXEL_SCHEMA
+    from spdb_spark.sources.volumetric import ingest_voxel_files
+
+    st = CuboidStore(spark, str(tmp_path / "mixed"), datatype="uint64")
+    corner, extent = (16 * CUBOID_X - 300, 0, 0), (600, 64, 32)  # x_idx 15|16, z_idx 0|1
+    truth = np.zeros(extent[::-1], dtype="uint64")
+    rng = np.random.default_rng(8)
+    x, y, z = (rng.integers(0, n, 300) for n in (290, 64, 32))  # pgroup 0 only
+    truth[z, y, x] = rng.choice([5, 6], 300)
+    zz, yy, xx = np.nonzero(truth)
+    voxels = [(st.lookup_key, 0, 0, int(a) + corner[0], int(b), int(c), int(truth[c, b, a]))
+              for a, b, c in zip(xx, yy, zz)]
+    spark.createDataFrame(voxels, VOXEL_SCHEMA).write.parquet(str(tmp_path / "vox"))
+    ingest_voxel_files(st, str(tmp_path / "vox"))
+    st.compact(0, blocks_per_file=1)
+
+    def files(pg):
+        return glob.glob(f"{st.path}/lookup_key=*/resolution=0/pgroup={pg}/*.parquet")
+
+    assert len(files(0)) == 2  # one Spark file per cuboid
+    paint = np.zeros((32, 40, 200), dtype="uint64")  # pgroup 1 only
+    paint[3:20, 5:30, 10:150] = 7
+    paint[25, 35, 199] = 5
+    st.write_cuboid(paint, (16 * CUBOID_X, 10, 0))
+    truth[:, 10:50, 300:500][paint != 0] = paint[paint != 0]
+    _drop_ids_column(st.path, 1)
+    fill = np.zeros((20, 10, 100), dtype="uint64")  # pgroup 0 only, z_idx 0|1
+    fill[:, :, :50] = 8
+    fill[:, :, 50:] = 6
+    st.write_cuboid(fill, (corner[0] + 100, 20, 6), mode="exception")
+    view = truth[6:26, 20:30, 100:200]
+    view[view == 0] = fill[view == 0]
+    assert len(files(0)) == 1 and len(files(1)) == 1
+    assert "ids" not in pq.read_schema(files(1)[0]).names
+
+    np.testing.assert_array_equal(st.cutout(corner, extent)[0], truth)
+    vox = st.voxels().toPandas()
+    dense = np.zeros_like(truth)
+    dense[vox["z"].to_numpy(), vox["y"].to_numpy(), vox["x"].to_numpy() - corner[0]] = (
+        vox["value"].to_numpy().astype("uint64")
+    )
+    np.testing.assert_array_equal(dense, truth)
+    by_spark = {(r.t, r.morton): (r.blob, r.ids) for r in st.blocks().collect()}
+    by_arrow = {(r["t"], r["morton"]): (r["blob"], r["ids"]) for r in st._fetch(0).to_pylist()}
+    assert by_spark == by_arrow and len(by_spark) == 4
+    for obj_id in (5, 6, 7, 8):
+        zs, ys, xs = np.nonzero(truth == obj_id)
+        assert st.id_bounds(obj_id) == [
+            (int(a.min()) + c, int(a.max()) + c) for a, c in zip((xs, ys, zs), corner)
+        ]
+
+    # a dense image cuboid is its own row group; small cuboids share one
+    img = CuboidStore(spark, str(tmp_path / "img"), datatype="uint8")
+    dense = rng.integers(0, 256, size=(16, 512, 2 * CUBOID_X)).astype("uint8")  # x_idx 0, 1
+    sparse = np.zeros((1, 1, 2 * CUBOID_X), dtype="uint8")  # x_idx 2, 3
+    sparse[0, 0, ::100] = 9
+    img.write_cuboid(dense, (0, 0, 0))
+    img.write_cuboid(sparse, (2 * CUBOID_X, 0, 0))
+    (path,) = glob.glob(f"{img.path}/lookup_key=*/resolution=0/pgroup=0/*.parquet")
+    meta = pq.ParquetFile(path).metadata
+    assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] == [1, 1, 2]
+    np.testing.assert_array_equal(img.cutout((0, 0, 0), (2 * CUBOID_X, 512, 16))[0], dense)

@@ -65,10 +65,11 @@ def test_compaction_preserves_data_and_reduces_files(spark, tmp_path):
 
     store = CuboidStore(spark, str(tmp_path / "blocks"))
     rng = np.random.default_rng(11)
-    # one 8-cuboid write: the block build runs as multiple tasks -> multiple
-    # files inside the super-block partition (fragmentation)
+    # one 8-cuboid write stages one file per super-block; a Spark rewrite
+    # with one cuboid per file fragments the partition
     vol = rng.integers(1, 200, size=(16, 512, 8 * 512)).astype("uint8")
     store.write_cuboid(vol, (0, 0, 0))
+    store.compact(0, blocks_per_file=1)
     before = store.cutout((0, 0, 0), (512, 512, 16))
     n_files_before = len(glob.glob(store.path + "/**/*.parquet", recursive=True))
     store.compact(0)
