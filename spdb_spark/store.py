@@ -159,7 +159,7 @@ def _among(name: str, values) -> pc.Expression:
     return (pc.field(name) >= lo) & (pc.field(name) <= hi) & pc.field(name).isin(list(values))
 
 
-def _box_filter(col: Callable, corner, extent, time_sample_range=None):
+def _box_filter(col: Callable, corner, extent, time_sample_range):
     """Range predicate on x/y/z_idx (and t) of the cuboids covering a box,
     over `col`: F.col for a Spark scan, pc.field for the driver fetch."""
     ranges = list(zip(("x_idx", "y_idx", "z_idx"), _cuboid_ranges(corner, extent)))
@@ -274,10 +274,10 @@ def _arrow_stage(stage_dir: str, rows: pa.Table, lookup_key: str, resolution: in
     closing a row group before it passes `_FILE_OPEN_COST` blob bytes."""
     pgroups = pc.shift_right(rows["morton"], PGROUP_SHIFT).to_numpy()
     sizes = pc.binary_length(rows["blob"]).to_numpy()
+    stats = ["t", "morton", "x_idx", "y_idx", "z_idx"]  # not the blobs
     for pg in np.unique(pgroups):
         part = f"{stage_dir}/lookup_key={_escape(lookup_key)}/resolution={resolution}/pgroup={pg}"
         os.makedirs(part)
-        stats = ["t", "morton", "x_idx", "y_idx", "z_idx"]  # not the blobs
         with pq.ParquetWriter(f"{part}/part-{uuid.uuid4()}.snappy.parquet", _FILE_SCHEMA,
                               compression="snappy", write_statistics=stats) as out:
             group, nbytes = [], 0
